@@ -83,7 +83,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
 
-    // Timing discipline lives in BenchTiming (shared with DevScale/DevTime
+    // Timing discipline lives in BenchTiming (shared with DevTime
     // so every harness's numbers stay comparable).
     def runOnce(name: String): Double = BenchTiming.runOnce(spark, name, sfDir)
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE timing discipline shared by every measurement entry point
-  * (Bench, DevScale, DevTime): blocking residue cleanup outside the timed
+  * (Bench, DevTime): blocking residue cleanup outside the timed
   * region, construction + noop-sink execution inside it. Lives in one
   * place so a future fix to the discipline (a new residue source to clear,
   * a new untimed cost discovered) applies to every harness at once —

@@ -117,9 +117,10 @@ object KnobSchedule {
     * frame-aligned and frame-blind offset paths
     * (`videoAlignedPairsScheduled`/`frameOffsetPairsScheduled` — the
     * frame-blind planes cross FIRST, their collision unit being
-    * clips × frames rows), the persisted streaming index
-    * (`sigIndexAuto`), and the frame-plane admission probes. Measured
-    * receipts: the `DevScale imagedup` lowcap legs (61× pair retention
+    * clips × frames rows), and the streaming admission index
+    * (`Multimodal.admissionIndex`, whose family every probe and
+    * compaction reads back). Measured receipts (BASELINE.md): the
+    * `imagedup` lowcap legs (61× pair retention
     * under the same occupancy pressure) and the `offsetgrouped` legs
     * (banded-8 index already losing 61% of exact-dup admissions at the
     * production cap on a 44k-sig state; grouped losing none). */
@@ -324,8 +325,8 @@ object KnobSchedule {
     * output size; before any compaction, the honest stand-in is the
     * current collapsed estimate or simply 0 to force the first pass).
     * Probe joins scan the RAW state, so expansion factor E costs on
-    * the state side — the corrected round-20 `DevScale sigcompact`
-    * receipt measured a 32.5× viral pile costing 2.7× probe wall, with
+    * the state side — the corrected round-20 `sigcompact` receipt in
+    * BASELINE.md measured a 32.5× viral pile costing 2.7× probe wall, with
     * the predicate firing on exactly that state — while compaction itself
     * is one pass over the state plus a groupBy, wasted when nothing has
     * collapsed. maxExpansion = 2 bounds probe overscan at 2× and makes

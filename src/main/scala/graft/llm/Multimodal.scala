@@ -635,144 +635,6 @@ object Multimodal {
             / col("n_truth").cast(DoubleType)).as("recall"))
   }
 
-  /** Streaming VIDEO near-dup ADMISSION (S42) — the S39/S41 discipline
-    * on the frame plane, completing the fourth ladder's streaming rung:
-    * the carried state is the (doc_id, frame_idx, dhash) per-frame
-    * signature table of every SEEN clip (dropped included), the
-    * arriving batch pays its own codec-boundary container walk, and a
-    * batch clip verdicts dup when ≥ minFrames aligned frames verify
-    * against ONE other clip (state → dup_corpus, earlier batch member →
-    * dup_batch). With ascending-id batches, kept/dropped equals the
-    * fused `videoNearDups` pair table of the drained corpus
-    * (StreamingSpec). `hotBands` (from `compactVideoSigState`) excludes
-    * compaction-flagged (frame, band) buckets from the state probe. */
-  def videoDedupIncrement(spark: SparkSession, batchBlobs: DataFrame,
-                          state: DataFrame, maxHamming: Int = 2,
-                          minFrames: Int = 2,
-                          hotBands: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val sig = videoFrameHashes(spark, batchBlobs).toDF()
-      .select(col("doc_id"), col("frame_idx"), col("dhash"))
-      .localCheckpoint()
-    def banded(df: DataFrame) = df.select(col("doc_id"), col("frame_idx"),
-      col("dhash"),
-      posexplode(array((0 until 8).map(bi =>
-        shiftright(col("dhash"), 8 * bi).bitwiseAND(lit(255L))): _*))
-        .as(Seq("band_idx", "band_val")))
-    videoAlignedVerdictsKeyed(sig, state, banded,
-      Seq("frame_idx", "band_idx", "band_val"), maxHamming, minFrames,
-      hotBands)
-  }
-
-  /** S42's grouped-era twin — frame-ALIGNED streaming admission on the
-    * l146 paired-group keys (round 19, completing the grouped probe
-    * family across all four streaming admission planes: sig-level
-    * S39/S41 via `sigDedupIncrementIndexedGrouped`, frame-blind offset
-    * S43/S45 via the `...OffsetDedupIncrementGrouped` pair, and the
-    * aligned S42 here): bucket key = (frame_idx, table_id, tkey);
-    * `hotKeys` is `compactVideoSigStateGrouped`'s exclusion.
-    * Verdict-identical to `videoDedupIncrement` for maxHamming ≤ 3
-    * with no exclusion (StreamingSpec pin). */
-  def videoDedupIncrementGrouped(spark: SparkSession,
-                                 batchBlobs: DataFrame, state: DataFrame,
-                                 maxHamming: Int = 2, minFrames: Int = 2,
-                                 hotKeys: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    require(maxHamming <= 4,
-      s"paired-group keys are lossy beyond Hamming 4 (requested " +
-        s"$maxHamming): 5 errors can touch 5 of the 6 groups, leaving " +
-        "no untouched pair")
-    val sig = videoFrameHashes(spark, batchBlobs).toDF()
-      .select(col("doc_id"), col("frame_idx"), col("dhash"))
-      .localCheckpoint()
-    videoAlignedVerdictsKeyed(sig, state,
-      df => sigGroupKeyed(df.select(col("doc_id"), col("frame_idx"),
-        col("dhash"))),
-      Seq("frame_idx", "table_id", "tkey"), maxHamming, minFrames,
-      hotKeys)
-  }
-
-  /** The aligned-admission machinery parameterized by the bucket-key
-    * family (keyCols INCLUDE frame_idx — alignment is part of the
-    * bucket key on this plane, for the guard and the join alike). */
-  private def videoAlignedVerdictsKeyed(sig: DataFrame, state: DataFrame,
-                                        keyFn: DataFrame => DataFrame,
-                                        keyCols: Seq[String],
-                                        maxHamming: Int, minFrames: Int,
-                                        hotKeys: Option[DataFrame])
-      : (DataFrame, DataFrame) = {
-    val b = keyFn(sig)
-    val s0 = keyFn(state.select(col("doc_id"), col("frame_idx"),
-      col("dhash")))
-    val s = hotKeys.fold(s0)(hot => s0.join(broadcast(hot), keyCols,
-      "left_anti"))
-    def dupIds(other: DataFrame, earlier: Column): DataFrame =
-      b.as("x").join(other.as("y"),
-          keyCols.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
-            && earlier)
-        .filter(bit_count(col("x.dhash").bitwiseXOR(col("y.dhash")))
-          <= maxHamming)
-        .select(col("x.doc_id").as("doc_id"),
-          col("y.doc_id").as("other_id"), col("x.frame_idx").as("fi"))
-        .distinct()
-        .groupBy(col("doc_id"), col("other_id"))
-        .agg(count(lit(1)).as("n_close"))
-        .filter(col("n_close") >= minFrames)
-        .select(col("doc_id")).distinct()
-    val vsState = dupIds(s, lit(true)).withColumn("dup_c", lit(true))
-    val vsBatch = dupIds(b, col("y.doc_id") < col("x.doc_id"))
-      .withColumn("dup_b", lit(true))
-    val verdicts = sig.select(col("doc_id")).distinct()
-      .join(vsState, Seq("doc_id"), "left")
-      .join(vsBatch, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("dup_c"), lit("dup_corpus"))
-          .when(col("dup_b"), lit("dup_batch"))
-          .otherwise(lit("kept")).as("verdict"))
-    (verdicts, sig)
-  }
-
-  /** `compactVideoSigState`'s grouped-era twin: the same
-    * exact-SEQUENCE collapse, with the hot exclusion over the ALIGNED
-    * (frame_idx, table_id, tkey) paired-group buckets of the collapsed
-    * occupancy — the key family `videoDedupIncrementGrouped` probes
-    * on. Returns (compactedState, hotKeys). */
-  def compactVideoSigStateGrouped(state: DataFrame, maxTableOcc: Int = 500)
-      : (DataFrame, DataFrame) = {
-    val sig = state.select(col("doc_id"), col("frame_idx"), col("dhash"))
-    val repSig = videoSeqReps(sig)
-    val hot = sigGroupKeyed(repSig)
-      .groupBy(col("frame_idx"), col("table_id"), col("tkey"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > maxTableOcc)
-      .select(col("frame_idx"), col("table_id"), col("tkey"))
-    (repSig, hot)
-  }
-
-  /** Video-state COMPACTION (the S42 caller contract — the
-    * `compactSigState` discipline on the frame plane): (a) exact-
-    * SEQUENCE collapse — one min-id representative per distinct ordered
-    * frame-hash vector (verdict-lossless for admission: identical
-    * vectors sit at identical per-frame Hamming from any probe);
-    * (b) the (frame_idx, band_idx, band_val) hot-bucket exclusion index
-    * over the COLLAPSED occupancy, which `videoDedupIncrement`
-    * anti-joins off its state-probe side. Returns (compactedState,
-    * hotBands). */
-  def compactVideoSigState(state: DataFrame, maxBandOcc: Int = 500)
-      : (DataFrame, DataFrame) = {
-    val sig = state.select(col("doc_id"), col("frame_idx"), col("dhash"))
-    val repSig = videoSeqReps(sig)
-    val hot = repSig.select(col("frame_idx"), col("dhash"),
-        posexplode(array((0 until 8).map(bi =>
-          shiftright(col("dhash"), 8 * bi).bitwiseAND(lit(255L))): _*))
-          .as(Seq("band_idx", "band_val")))
-      .groupBy(col("frame_idx"), col("band_idx"), col("band_val"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > maxBandOcc)
-      .select(col("frame_idx"), col("band_idx"), col("band_val"))
-    (repSig, hot)
-  }
-
   /** L136 — OFFSET-tolerant video near-dup pairs: the trimmed-re-edit
     * class l133's frame-ALIGNED key is conservative about (a clip
     * re-posted with its intro cut is the same content shifted by a few
@@ -998,49 +860,6 @@ object Multimodal {
       .join(losers, Seq("doc_id"), "left_anti")
   }
 
-  /** Streaming OFFSET-tolerant video admission (S43) — the S42
-    * discipline with l136's pair semantics: the carried state is the
-    * same (doc_id, frame_idx, dhash) table, but the batch probe joins
-    * the hash bands frame-BLIND with a ±maxOffset displacement window,
-    * so a trimmed re-edit of an already-seen clip verdicts dup (S42's
-    * frame-aligned probe is blind to it — the same gap l136 closes in
-    * batch). A clip drops when ≥ minFrames frames verify against ONE
-    * other clip at a SINGLE displacement. `hotBands` (from
-    * `compactVideoSigStateOffset`) excludes frame-blind hot buckets
-    * from the state probe. */
-  def videoOffsetDedupIncrement(spark: SparkSession, batchBlobs: DataFrame,
-                                state: DataFrame, maxHamming: Int = 2,
-                                minFrames: Int = 2, maxOffset: Int = 1,
-                                hotBands: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val sig = videoFrameHashes(spark, batchBlobs).toDF()
-      .select(col("doc_id"), col("frame_idx"), col("dhash"))
-      .localCheckpoint()
-    frameSigOffsetVerdicts(spark, sig, sig.select(col("doc_id")).distinct(),
-      state, maxHamming, minFrames, maxOffset, hotBands)
-  }
-
-  /** State compaction for the OFFSET admission (S43's caller contract):
-    * the same exact-SEQUENCE collapse as `compactVideoSigState` (one
-    * min-id rep per ordered frame-hash vector — verdict-lossless), but
-    * the hot-bucket exclusion index is frame-BLIND (band_idx, band_val)
-    * — the key `videoOffsetDedupIncrement` probes on. Returns
-    * (compactedState, hotBands). */
-  def compactVideoSigStateOffset(state: DataFrame, maxBandOcc: Int = 500)
-      : (DataFrame, DataFrame) = {
-    val sig = state.select(col("doc_id"), col("frame_idx"), col("dhash"))
-    val repSig = videoSeqReps(sig)
-    val hot = repSig.select(col("dhash"),
-        posexplode(array((0 until 8).map(bi =>
-          shiftright(col("dhash"), 8 * bi).bitwiseAND(lit(255L))): _*))
-          .as(Seq("band_idx", "band_val")))
-      .groupBy(col("band_idx"), col("band_val"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > maxBandOcc)
-      .select(col("band_idx"), col("band_val"))
-    (repSig, hot)
-  }
-
   // ------------------------------------------- audio window fingerprints
 
   /** One audio WINDOW's 64-bit fingerprint row: the l127 gradient-sign
@@ -1239,181 +1058,6 @@ object Multimodal {
       .join(counts, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_windows"), lit(0L)).as("n_windows"))
-  }
-
-  /** Streaming OFFSET-tolerant AUDIO admission (S45) — the S43
-    * discipline on the window-fingerprint plane: the carried state is
-    * the (doc_id, frame_idx ≙ win_idx, dhash) window table of every
-    * SEEN clip; a batch clip drops on ≥ minWindows close windows vs ONE
-    * other clip at a SINGLE displacement. Clips shorter than one window
-    * have no fingerprint rows: they are always kept and add no state.
-    * `hotBands` is `compactVideoSigStateOffset`'s frame-blind index —
-    * the state shape is identical, so the video compactor serves both
-    * planes. */
-  def audioOffsetDedupIncrement(spark: SparkSession, batchBlobs: DataFrame,
-                                state: DataFrame, maxHamming: Int = 2,
-                                minWindows: Int = 1, maxOffset: Int = 1,
-                                hotBands: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val sig = audioWindowFrameSigs(spark, batchBlobs).localCheckpoint()
-    val batchIds = batchBlobs.select(col("doc_id")).distinct()
-    val (verdicts, _) = frameSigOffsetVerdicts(spark, sig, batchIds, state,
-      maxHamming, minWindows, maxOffset, hotBands)
-    (verdicts, sig)
-  }
-
-  /** The sig-level offset-admission core shared by the video S43 (via
-    * `videoOffsetDedupIncrement`) and audio S45 wrappers: frame-blind
-    * band probe of state and earlier batch members with the
-    * displacement window, per-(doc, other, offset) close-count fold,
-    * verdicts over `memberIds` (so ids with NO sig rows still verdict
-    * `kept`). */
-  private def frameSigOffsetVerdicts(spark: SparkSession, sig: DataFrame,
-                                     memberIds: DataFrame, state: DataFrame,
-                                     maxHamming: Int, minFrames: Int,
-                                     maxOffset: Int,
-                                     hotBands: Option[DataFrame])
-      : (DataFrame, DataFrame) = {
-    def banded(df: DataFrame) = df.select(col("doc_id"), col("frame_idx"),
-      col("dhash"),
-      posexplode(array((0 until 8).map(bi =>
-        shiftright(col("dhash"), 8 * bi).bitwiseAND(lit(255L))): _*))
-        .as(Seq("band_idx", "band_val")))
-    frameSigOffsetVerdictsKeyed(sig, memberIds, state, banded,
-      Seq("band_idx", "band_val"), maxHamming, minFrames, maxOffset,
-      hotBands)
-  }
-
-  /** GROUPED-KEY form of the frame-plane offset admission — the S43/S45
-    * probe at the band ladder's end (round 19, the sig-plane grouped
-    * index's twin on the frame plane): the frame-blind band probe's
-    * 2048 buckets saturate at clips × frames state rows ~2¹³× before
-    * the 15·2²¹⁺ paired-group keys, and the compaction exclusion then
-    * silences the whole probe (the `offsetgrouped` index legs' exact
-    * pressure). Keys the batch AND the state frame-blind on the l146
-    * paired-group keys; `hotKeys` is
-    * `compactVideoSigStateOffsetGrouped`'s (table_id, tkey) exclusion.
-    * Verdict-identical to `frameSigOffsetVerdicts` for maxHamming ≤ 3
-    * with no exclusion (both key families recall-lossless there;
-    * StreamingSpec pins it). */
-  private def frameSigOffsetVerdictsGrouped(sig: DataFrame,
-                                            memberIds: DataFrame,
-                                            state: DataFrame,
-                                            maxHamming: Int, minFrames: Int,
-                                            maxOffset: Int,
-                                            hotKeys: Option[DataFrame])
-      : (DataFrame, DataFrame) = {
-    require(maxHamming <= 4,
-      s"paired-group keys are lossy beyond Hamming 4 (requested " +
-        s"$maxHamming): 5 errors can touch 5 of the 6 groups, leaving " +
-        "no untouched pair")
-    frameSigOffsetVerdictsKeyed(sig, memberIds, state,
-      df => sigGroupKeyed(df.select(col("doc_id"), col("frame_idx"),
-        col("dhash"))),
-      Seq("table_id", "tkey"), maxHamming, minFrames, maxOffset, hotKeys)
-  }
-
-  /** The offset-admission machinery parameterized by the bucket-key
-    * family (8-bit frame-blind bands or l146 paired-group keys) — the
-    * `sigVerdictsAgainstKeyed` discipline on the frame plane. */
-  private def frameSigOffsetVerdictsKeyed(sig: DataFrame,
-                                          memberIds: DataFrame,
-                                          state: DataFrame,
-                                          keyFn: DataFrame => DataFrame,
-                                          keyCols: Seq[String],
-                                          maxHamming: Int, minFrames: Int,
-                                          maxOffset: Int,
-                                          hotKeys: Option[DataFrame])
-      : (DataFrame, DataFrame) = {
-    val b = keyFn(sig)
-    val s0 = keyFn(state.select(col("doc_id"), col("frame_idx"),
-      col("dhash")))
-    val s = hotKeys.fold(s0)(hot => s0.join(broadcast(hot), keyCols,
-      "left_anti"))
-    def dupIds(other: DataFrame, earlier: Column): DataFrame =
-      b.as("x").join(other.as("y"),
-          keyCols.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
-            && earlier
-            && (col("y.frame_idx") - col("x.frame_idx"))
-              .between(-maxOffset, maxOffset))
-        .filter(bit_count(col("x.dhash").bitwiseXOR(col("y.dhash")))
-          <= maxHamming)
-        .select(col("x.doc_id").as("doc_id"),
-          col("y.doc_id").as("other_id"),
-          (col("y.frame_idx") - col("x.frame_idx")).as("off"),
-          col("x.frame_idx").as("fi"))
-        .distinct()
-        .groupBy(col("doc_id"), col("other_id"), col("off"))
-        .agg(count(lit(1)).as("n_close"))
-        .filter(col("n_close") >= minFrames)
-        .select(col("doc_id")).distinct()
-    val vsState = dupIds(s, lit(true)).withColumn("dup_c", lit(true))
-    val vsBatch = dupIds(b, col("y.doc_id") < col("x.doc_id"))
-      .withColumn("dup_b", lit(true))
-    val verdicts = memberIds
-      .join(vsState, Seq("doc_id"), "left")
-      .join(vsBatch, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("dup_c"), lit("dup_corpus"))
-          .when(col("dup_b"), lit("dup_batch"))
-          .otherwise(lit("kept")).as("verdict"))
-    (verdicts, sig)
-  }
-
-  /** Streaming OFFSET-tolerant VIDEO admission against GROUPED keys —
-    * `videoOffsetDedupIncrement`'s end-of-ladder twin (the caller
-    * switches families at compaction cadence, exactly like the
-    * sig-plane `sigIndexAuto` story). */
-  def videoOffsetDedupIncrementGrouped(spark: SparkSession,
-                                       batchBlobs: DataFrame,
-                                       state: DataFrame,
-                                       maxHamming: Int = 2,
-                                       minFrames: Int = 2,
-                                       maxOffset: Int = 1,
-                                       hotKeys: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val sig = videoFrameHashes(spark, batchBlobs).toDF()
-      .select(col("doc_id"), col("frame_idx"), col("dhash"))
-      .localCheckpoint()
-    frameSigOffsetVerdictsGrouped(sig,
-      sig.select(col("doc_id")).distinct(), state, maxHamming, minFrames,
-      maxOffset, hotKeys)
-  }
-
-  /** Streaming OFFSET-tolerant AUDIO admission against GROUPED keys —
-    * `audioOffsetDedupIncrement`'s end-of-ladder twin (shared core,
-    * window-sig shape). */
-  def audioOffsetDedupIncrementGrouped(spark: SparkSession,
-                                       batchBlobs: DataFrame,
-                                       state: DataFrame,
-                                       maxHamming: Int = 2,
-                                       minWindows: Int = 1,
-                                       maxOffset: Int = 1,
-                                       hotKeys: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val sig = audioWindowFrameSigs(spark, batchBlobs).localCheckpoint()
-    val batchIds = batchBlobs.select(col("doc_id")).distinct()
-    val (verdicts, _) = frameSigOffsetVerdictsGrouped(sig, batchIds, state,
-      maxHamming, minWindows, maxOffset, hotKeys)
-    (verdicts, sig)
-  }
-
-  /** `compactVideoSigStateOffset`'s grouped-era twin: the same
-    * exact-SEQUENCE collapse (verdict-lossless), with the hot exclusion
-    * computed over the frame-blind (table_id, tkey) paired-group
-    * buckets of the COLLAPSED occupancy — the key family the grouped
-    * offset probes join on. Returns (compactedState, hotKeys). */
-  def compactVideoSigStateOffsetGrouped(state: DataFrame,
-                                        maxTableOcc: Int = 500)
-      : (DataFrame, DataFrame) = {
-    val sig = state.select(col("doc_id"), col("frame_idx"), col("dhash"))
-    val repSig = videoSeqReps(sig)
-    val hot = sigGroupKeyed(repSig.select(col("doc_id"), col("dhash")))
-      .groupBy(col("table_id"), col("tkey"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > maxTableOcc)
-      .select(col("table_id"), col("tkey"))
-    (repSig, hot)
   }
 
   /** L147 — video OFFSET-WINDOW sweep: the l126-family knob-pricing
@@ -1993,33 +1637,16 @@ object Multimodal {
       dHashFlipInvariant(spark, encodePpm(spark, docs).toDF()).toDF(),
       maxHamming, configs)
 
-  /** Streaming FLIP-INVARIANT admission (S44) — S39's discipline on the
-    * canonical signature: a mirrored re-post of an already-seen image
-    * verdicts dup (S39's plain-dHash probe keeps it). The carried state
-    * is the (doc_id, dhash) CANONICAL signature table; everything else
-    * — probe shape, compaction (`compactSigState`), the persisted
-    * band-index form — is the shared sig-level machinery unchanged. */
-  def imageFlipDedupIncrement(spark: SparkSession, batchBlobs: DataFrame,
-                              state: DataFrame, maxHamming: Int = 2,
-                              hotBands: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) =
-    sigDedupIncrement(
-      dHashFlipInvariant(spark, batchBlobs).toDF()
-        .select(col("doc_id"), col("dhash")),
-      state, maxHamming, hotBands)
-
   /** The 64-bit signature split into 6 bit-groups (widths
     * 11,11,11,11,10,10 at offsets 0,11,22,33,44,54) for the
-    * paired-group candidate keys below. `private[graft]` so the
-    * DevScale hot-bucket receipt measures THIS grouping, not a copy
-    * that could silently desynchronize. */
+    * paired-group candidate keys below. */
   private[graft] val SigGroups: Seq[(Int, Int)] =
     Seq((0, 11), (11, 11), (22, 11), (33, 11), (44, 10), (54, 10))
 
   /** The C(6,2) = 15 paired-group key expressions over a `dhash`
     * column: table t's key is group i's bits concatenated with group
-    * j's (21–22 bits). Shared by the pair core, the occupancy sweep,
-    * the grouped streaming index and the DevScale receipt. */
+    * j's (21–22 bits). Shared by the pair core, the occupancy sweep
+    * and the grouped family of `admissionIndex`. */
   private[graft] def sigGroupKeyExprs: Seq[Column] = {
     val tables = for { i <- 0 until 6; j <- (i + 1) until 6 } yield (i, j)
     tables.map { case (i, j) =>
@@ -2618,7 +2245,7 @@ object Multimodal {
     * maxHamming < 64/bits). recall = n_pairs/n_truth is exactly the
     * fraction of true near-dup pairs the guard sacrifices at that
     * width — the table read before fixing `dhashBandBits`'s schedule
-    * (the DevScale `imagedup` receipt at 10×: fixed 8-bit keeps 0.4%
+    * (BASELINE.md's `imagedup` receipt at 10×: fixed 8-bit keeps 0.4%
     * of true pairs; scheduled 16-bit keeps 100%).
     *
     * Scale: ONE decode+hash pass shared by all legs (the sig table is
@@ -2793,7 +2420,7 @@ object Multimodal {
     // ~4.2M reps at radius ≤ 3 and the default targetOcc) candidate
     // generation switches to the l146 paired-group keys, whose buckets
     // are 32–64× smaller at the same lossless radius
-    // (KnobSchedule.dhashUseGroupedKeys; the DevScale imagedup lowcap
+    // (KnobSchedule.dhashUseGroupedKeys; BASELINE.md's imagedup lowcap
     // receipt). `targetOcc` is the schedule's occupancy target — the
     // threshold is targetOcc·2¹⁶ reps, so receipts/specs cross the
     // switch at equivalent pressure by lowering it rather than
@@ -2839,302 +2466,182 @@ object Multimodal {
     sigDedupApply(audioHash(spark, blobs).toDF(), maxHamming, maxBandOcc,
       bandBits = None, guardTargetRecall = guardTargetRecall)
 
-  /** Streaming IMAGE near-dup ADMISSION (S39) — the l52/S34/S37
-    * arrival-order discipline on the perceptual plane: the carried state
-    * is the (doc_id, dhash) signature table of every SEEN image (ALL of
-    * them, dropped included — a rejected image still rejects later
-    * re-posts, exactly as every earlier doc pairs in the fused l122).
-    * An arriving blob batch pays its own codec-boundary dHash pass, is
-    * band-probed against the state AND its own earlier (smaller doc_id)
-    * batch members, and Hamming-verified; its signatures append to
-    * state by disjoint union. Verdicts per batch image:
-    * `dup_corpus` (a state partner within maxHamming shares a band),
-    * else `dup_batch` (an earlier batch member does), else `kept`.
+  /** How an arriving clip's close frames must line up with ONE other
+    * clip's for the streaming admission to drop it. `Aligned`: frame f
+    * meets frame f only (S42; a signature table with no `frame_idx`
+    * column is the one-frame case — the image, flipped-image and audio
+    * clip planes S39/S41/S44 at minFrames 1). `Offset`: frames meet
+    * frame-BLIND and count at a SINGLE displacement within ±maxOffset
+    * (l136's pair semantics — S43 on video frames, S45 on audio
+    * windows renamed to `frame_idx`), so a head-trimmed re-edit drops
+    * where the aligned probe keeps it. */
+  sealed trait FrameMatch { def minFrames: Int }
+  object FrameMatch {
+    final case class Aligned(minFrames: Int = 1) extends FrameMatch
+    final case class Offset(minFrames: Int = 1, maxOffset: Int = 1)
+        extends FrameMatch {
+      require(maxOffset >= 0, s"maxOffset must be >= 0: $maxOffset")
+    }
+  }
+
+  /** The carried probe INDEX of a streaming admission loop (S39, S41–S45
+    * — the l52 `bandIndex` discipline on the perceptual planes): every
+    * SEEN signature row (dropped included — a rejected clip still
+    * rejects later re-posts, exactly as every earlier doc pairs in the
+    * fused pair tables), keyed for the probe. The key family is decided
+    * here, at (re)build cadence, by the end-of-ladder switch
+    * (`KnobSchedule.dhashUseGroupedKeys` on the row count): 8-bit bands
+    * (8 rows per signature, `band_idx`/`band_val`, 2048 buckets) while
+    * the ladder holds, the l146 paired-group keys past its end (15 rows
+    * per signature, `table_id`/`tkey`, buckets 32–64× smaller, lossless
+    * to Hamming 4). Probes and compaction read the family back from the
+    * index's columns — the format IS the recorded switch decision, never
+    * re-derived from a corpus count the index may predate. `sig` is any
+    * extractor's output (`dHash`, `dHashFlipInvariant`, `audioHash`,
+    * `videoFrameHashes`, `audioWindowHashes` with `win_idx` renamed to
+    * `frame_idx`); only doc_id, frame_idx (when present) and dhash are
+    * kept. */
+  def admissionIndex(sig: DataFrame, maxHamming: Int = 2): DataFrame = {
+    val s = sigRows(sig).localCheckpoint()
+    admissionKeyed(s, KnobSchedule.dhashUseGroupedKeys(s.count(), maxHamming))
+  }
+
+  /** Streaming near-dup ADMISSION against the carried index — one
+    * operator for every modality and key family. The arriving batch's
+    * signatures are keyed in the index's family and probed against the
+    * index (minus the `hotBuckets` exclusion from
+    * `compactAdmissionIndex`) and against the batch's own earlier
+    * (smaller doc_id) members; candidates are Hamming-verified per
+    * frame, folded per (doc, other[, displacement]) to a close-frame
+    * count, and a batch member is a duplicate when that count reaches
+    * `frames.minFrames` against ONE other clip. Verdicts per distinct
+    * batch doc_id: `dup_corpus` (an index partner), else `dup_batch` (an
+    * earlier batch member), else `kept`; ids with no signature rows (an
+    * audio clip shorter than one window) get no row and add no state.
     * With batches arriving in ascending doc_id order, kept/dropped
-    * equals the fused `imageNearDupsFromBlobs` pair table of the
-    * drained corpus (tested in StreamingSpec); out-of-order arrival
-    * degrades conservatively — the later arrival is the one dropped
-    * (l52's documented policy).
+    * equals the fused pair table of the drained corpus (StreamingSpec);
+    * out-of-order arrival degrades conservatively — the later arrival is
+    * the one dropped (l52's policy).
     *
-    * Per-batch cost: the batch's own decode+hash (mapPartitions), one
-    * band-keyed batch⋈state probe (state rows are 16 bytes of id+hash,
-    * exploded ×8 band keys at probe time — never re-decoded), one
-    * within-batch band join, and an id-keyed verdict fold. The state
-    * is never re-paired against itself. The fused operator's hot-band
-    * guard applies when COMPACTING the persisted state index
-    * (`compactSigState` — exact-hash collapse + hot-band exclusion),
-    * not per batch (occupancy is a corpus property, not a batch one):
-    * pass the compacted state and its `hotBands` index here at the
-    * caller's compaction cadence. Returns (verdicts, batchSigs) — the
-    * caller appends batchSigs to state. */
-  def imageDedupIncrement(spark: SparkSession, batchBlobs: DataFrame,
-                          state: DataFrame, maxHamming: Int = 2,
-                          hotBands: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) =
-    sigDedupIncrement(dHash(spark, batchBlobs).toDF(), state, maxHamming,
-      hotBands)
-
-  /** Streaming AUDIO near-dup ADMISSION (S41) — imageDedupIncrement's
-    * twin on the audio plane, completing the audio ladder's streaming
-    * rung: the carried state is the (doc_id, dhash) gradient-sign
-    * signature table of every SEEN clip (dropped included), the
-    * arriving batch pays its own codec-boundary `audioHash` pass, and
-    * the shared sig-level core issues dup_corpus/dup_batch/kept
-    * verdicts. With batches in ascending doc_id order, kept/dropped
-    * equals the fused `audioNearDups` pair table of the drained corpus
-    * (StreamingSpec); compaction cadence is `compactSigState`'s caller
-    * contract. */
-  def audioDedupIncrement(spark: SparkSession, batchBlobs: DataFrame,
-                          state: DataFrame, maxHamming: Int = 2,
-                          hotBands: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) =
-    sigDedupIncrement(audioHash(spark, batchBlobs).toDF(), state, maxHamming,
-      hotBands)
-
-  /** The modality-neutral sig-level admission core (image S39 / audio
-    * S41): band-probe the batch signatures against the state and the
-    * batch's own earlier (smaller doc_id) members, Hamming-verify,
-    * fold to per-id verdicts. `hotBands` (from `compactSigState`) is
-    * the OPERATIONAL hot-band exclusion: band buckets whose state
-    * occupancy exceeded the compaction cap are dropped from the
-    * state-probe side — the same documented recall trade the fused
-    * operator's guard makes, applied at compaction cadence because
-    * occupancy is a corpus property, not a batch one. Exact-duplicate
-    * re-posts remain immune to the exclusion when the state was
-    * compacted with `compactSigState`: its exact-hash collapse keeps
-    * one rep per hash VALUE, and an arriving exact copy shares every
-    * band with its rep — all 64/bandBits of them — so at least one
-    * cold band survives unless the rep's entire signature is hot, the
-    * degenerate-payload case the guard exists to absorb. */
-  private[graft] def sigDedupIncrement(batchSig: DataFrame, state: DataFrame,
-                                       maxHamming: Int,
-                                       hotBands: Option[DataFrame] = None)
+    * Per-batch cost: the batch's own keying plus one bucket-keyed
+    * probe of the persisted index — nothing corpus-sized is re-derived,
+    * and the index is never re-paired against itself. The hot-bucket
+    * guard is a corpus property, so it is applied at compaction cadence,
+    * not per batch. Returns (verdicts, batchIndexRows); the caller
+    * appends batchIndexRows to the index by union (NOT idempotent under
+    * re-delivery: the S22 exactly-once foreachBatch discipline
+    * applies). */
+  def admitNearDups(batchSig: DataFrame, index: DataFrame,
+                    maxHamming: Int = 2,
+                    frames: FrameMatch = FrameMatch.Aligned(),
+                    hotBuckets: Option[DataFrame] = None)
       : (DataFrame, DataFrame) = {
-    val sig = batchSig.select(col("doc_id"), col("dhash")).localCheckpoint()
-    val s0 = bandedSigs(state.select(col("doc_id"), col("dhash")), 8)
-    val s = hotBands.fold(s0)(hot =>
-      s0.join(broadcast(hot), Seq("band_idx", "band_val"), "left_anti"))
-    (sigVerdictsAgainst(sig, s, maxHamming), sig)
-  }
-
-  /** The carried-state INDEX form of the streaming admission: at
-    * 100 TB the plain (doc_id, dhash) state form pays an O(state)
-    * band-explode EVERY batch (`sigDedupIncrement` re-derives the
-    * banded probe table per call — fine on a warm cache, wrong as the
-    * corpus-sized recurring cost). The production loop carries the
-    * BANDED index itself (the l52 `bandIndex`/`extendIndex` discipline
-    * on the perceptual plane): build once (`sigBandIndex`), persist
-    * partitioned however the store likes, append per batch with the
-    * batch's own 8 rows/signature (`extendSigIndex`), and probe with
-    * `sigDedupIncrementIndexed` — per-batch cost is then the batch's
-    * codec pass + one band-keyed probe against the persisted index,
-    * nothing corpus-sized recomputed. At compaction cadence, rebuild
-    * the index from `compactSigState`'s collapsed reps and swap in its
-    * hot-band exclusion. */
-  def sigBandIndex(sig: DataFrame): DataFrame =
-    bandedSigs(sig.select(col("doc_id"), col("dhash")), 8)
-
-  /** Append a batch's signatures to the carried band index (8 narrow
-    * rows per signature — id/hash/band longs only). NOT idempotent
-    * under re-delivery: the S22 exactly-once foreachBatch discipline
-    * applies. */
-  def extendSigIndex(index: DataFrame, batchSig: DataFrame): DataFrame =
-    index.unionByName(sigBandIndex(batchSig))
-
-  /** Streaming admission against the PERSISTED band index — verdict-
-    * identical to `sigDedupIncrement` over the index's underlying
-    * signature table (StreamingSpec pins the equality); `hotBands`
-    * excludes compaction-flagged buckets from the index probe side
-    * exactly as in the state form. Returns (verdicts, batchIndexRows):
-    * the caller appends batchIndexRows via union — the batch pays its
-    * own 8-rows/signature banding, never the corpus's. */
-  def sigDedupIncrementIndexed(batchSig: DataFrame, index: DataFrame,
-                               maxHamming: Int = 2,
-                               hotBands: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    val sig = batchSig.select(col("doc_id"), col("dhash")).localCheckpoint()
-    val s = hotBands.fold(index)(hot =>
-      index.join(broadcast(hot), Seq("band_idx", "band_val"), "left_anti"))
-    (sigVerdictsAgainst(sig, s, maxHamming), sigBandIndex(sig))
-  }
-
-  /** GROUPED-KEY form of the persisted probe index (round-18 directive
-    * #1b): past the band ladder's end the 8-bit band index saturates —
-    * its 2048 buckets hold n/2⁸ signatures each, so EVERY batch probe
-    * fans out quadratically in state size and the compaction guard
-    * starts eating recall (the l146 receipt's pressure, on the carried
-    * S39/S41 state). The grouped index carries the 15 paired-group key
-    * rows per signature (21–22-bit keys — buckets 32–64× smaller than
-    * even 16-bit bands) at 1.9× the band index's row count, lossless
-    * to Hamming 4. Build at (re)build/compaction cadence when
-    * `KnobSchedule.dhashUseGroupedKeys` says the corpus crossed the
-    * threshold (`sigIndexAuto` packages the choice). */
-  def sigGroupIndex(sig: DataFrame): DataFrame =
-    sigGroupKeyed(sig.select(col("doc_id"), col("dhash")))
-
-  /** Append a batch's signatures to the carried grouped index (15
-    * narrow rows per signature). NOT idempotent under re-delivery: the
-    * S22 exactly-once foreachBatch discipline applies. */
-  def extendSigGroupIndex(index: DataFrame, batchSig: DataFrame): DataFrame =
-    index.unionByName(sigGroupIndex(batchSig))
-
-  /** Streaming admission against the persisted GROUPED index —
-    * verdict-identical to `sigDedupIncrementIndexed` over the same
-    * underlying signature table for maxHamming ≤ 3 with no hot
-    * exclusion (both key families are recall-lossless there;
-    * StreamingSpec pins the equality). `hotKeys` excludes
-    * compaction-flagged (table_id, tkey) buckets from the index probe
-    * side (`compactSigStateGrouped`'s second return). Returns
-    * (verdicts, batchIndexRows) — the caller appends batchIndexRows
-    * via union; the batch pays its own 15-rows/signature keying, never
-    * the corpus's. */
-  def sigDedupIncrementIndexedGrouped(batchSig: DataFrame, index: DataFrame,
-                                      maxHamming: Int = 2,
-                                      hotKeys: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) = {
-    require(maxHamming <= 4,
+    val grouped = index.columns.contains("table_id")
+    require(!grouped || maxHamming <= 4,
       s"paired-group keys are lossy beyond Hamming 4 (requested " +
         s"$maxHamming): 5 errors can touch 5 of the 6 groups, leaving " +
         "no untouched pair")
-    val sig = batchSig.select(col("doc_id"), col("dhash")).localCheckpoint()
-    val s = hotKeys.fold(index)(hot =>
-      index.join(broadcast(hot), Seq("table_id", "tkey"), "left_anti"))
-    (sigVerdictsAgainstKeyed(sig, s, sigGroupIndex,
-      Seq("table_id", "tkey"), maxHamming), sigGroupIndex(sig))
-  }
-
-  /** Build the persisted probe index in the format the corpus size
-    * calls for: banded (8 rows/sig, 2048 buckets) while the band
-    * ladder holds, l146 grouped keys (15 rows/sig, 15·2²¹⁻²² buckets)
-    * past its end. Called at build/compaction cadence — the format is
-    * a property of the PERSISTED index, so the switch is evaluated
-    * where the index is (re)built, and probes dispatch on the format
-    * they find (`sigDedupIncrementIndexedAuto`). */
-  def sigIndexAuto(sig: DataFrame, maxHamming: Int = 2): DataFrame = {
-    val s = sig.select(col("doc_id"), col("dhash")).localCheckpoint()
-    if (KnobSchedule.dhashUseGroupedKeys(s.count(), maxHamming))
-      sigGroupIndex(s)
-    else sigBandIndex(s)
-  }
-
-  /** Probe whichever index format `sigIndexAuto` built — dispatched on
-    * the index's own columns (the format IS the recorded switch
-    * decision; a probe must never re-derive it from a corpus count the
-    * index may predate). `hotBuckets` is the matching compaction
-    * exclusion: (band_idx, band_val) rows for a banded index
-    * (`compactSigState`), (table_id, tkey) rows for a grouped one
-    * (`compactSigStateGrouped`). */
-  def sigDedupIncrementIndexedAuto(batchSig: DataFrame, index: DataFrame,
-                                   maxHamming: Int = 2,
-                                   hotBuckets: Option[DataFrame] = None)
-      : (DataFrame, DataFrame) =
-    if (index.columns.contains("table_id"))
-      sigDedupIncrementIndexedGrouped(batchSig, index, maxHamming,
-        hotBuckets)
-    else sigDedupIncrementIndexed(batchSig, index, maxHamming, hotBuckets)
-
-  /** Append to whichever index format is carried (same dispatch). */
-  def extendSigIndexAuto(index: DataFrame, batchSig: DataFrame): DataFrame =
-    if (index.columns.contains("table_id"))
-      extendSigGroupIndex(index, batchSig)
-    else extendSigIndex(index, batchSig)
-
-  /** The shared verdict core: band-probe the batch signatures against a
-    * banded other-side (state or persisted index) and the batch's own
-    * earlier (smaller doc_id) members, Hamming-verify, fold to per-id
-    * dup_corpus/dup_batch/kept verdicts. */
-  private def sigVerdictsAgainst(sig: DataFrame, bandedOther: DataFrame,
-                                 maxHamming: Int): DataFrame =
-    sigVerdictsAgainstKeyed(sig, bandedOther, s => bandedSigs(s, 8),
-      Seq("band_idx", "band_val"), maxHamming)
-
-  /** The verdict machinery parameterized by the bucket-key family
-    * (8-bit bands or l146 paired-group keys): key the batch with
-    * `keyBatch`, probe the pre-keyed other side (state or persisted
-    * index) and the batch's own earlier members on `keyCols`,
-    * Hamming-verify, fold to per-id verdicts. */
-  private def sigVerdictsAgainstKeyed(sig: DataFrame, keyedOther: DataFrame,
-                                      keyBatch: DataFrame => DataFrame,
-                                      keyCols: Seq[String],
-                                      maxHamming: Int): DataFrame = {
-    val b = keyBatch(sig)
+    val sig = sigRows(batchSig).localCheckpoint()
+    val hasFrames = sig.columns.contains("frame_idx")
+    val disp = col("y.frame_idx") - col("x.frame_idx")
+    val (window, offCols) = frames match {
+      case FrameMatch.Offset(_, maxOffset) =>
+        require(hasFrames, "an Offset probe needs a frame_idx column")
+        (disp.between(-maxOffset, maxOffset), Seq(disp.as("off")))
+      case FrameMatch.Aligned(_) => (lit(true), Nil)
+    }
+    val frameCols = if (hasFrames) Seq(col("x.frame_idx").as("fi")) else Nil
+    val keys = bucketCols(index, frames)
+    val b = admissionKeyed(sig, grouped)
+    val probed = hotBuckets.fold(index)(hot =>
+      index.join(broadcast(hot), keys, "left_anti"))
     def dupIds(other: DataFrame, earlier: Column): DataFrame =
       b.as("x").join(other.as("y"),
-          keyCols.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
-            && earlier)
+          keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
+            && earlier && window)
         .filter(bit_count(col("x.dhash").bitwiseXOR(col("y.dhash")))
           <= maxHamming)
-        .select(col("x.doc_id").as("doc_id")).distinct()
-    val vsState = dupIds(keyedOther, lit(true)).withColumn("dup_c", lit(true))
+        .select(Seq(col("x.doc_id").as("doc_id"),
+          col("y.doc_id").as("other_id")) ++ offCols ++ frameCols: _*)
+        .distinct()
+        .groupBy(Seq(col("doc_id"), col("other_id"))
+          ++ offCols.map(_ => col("off")): _*)
+        .agg(count(lit(1)).as("n_close"))
+        .filter(col("n_close") >= frames.minFrames)
+        .select(col("doc_id")).distinct()
+    val vsIndex = dupIds(probed, lit(true)).withColumn("dup_c", lit(true))
     val vsBatch = dupIds(b, col("y.doc_id") < col("x.doc_id"))
       .withColumn("dup_b", lit(true))
-    sig.select(col("doc_id"))
-      .join(vsState, Seq("doc_id"), "left")
+    val verdicts = sig.select(col("doc_id")).distinct()
+      .join(vsIndex, Seq("doc_id"), "left")
       .join(vsBatch, Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(col("dup_c"), lit("dup_corpus"))
           .when(col("dup_b"), lit("dup_batch"))
           .otherwise(lit("kept")).as("verdict"))
+    (verdicts, b)
   }
 
-  /** State COMPACTION for the streaming admission loops (S39/S41) —
-    * the shipped form of the operator contract round 17 only promised
-    * ("the guard applies when COMPACTING the persisted state index"):
-    * (a) exact-hash collapse — one min-id representative per distinct
-    * signature VALUE, verdict-lossless for admission because identical
-    * hashes are at identical Hamming distance from any probe, so a
-    * batch member within radius of a dropped member is within radius
-    * of its rep (a state dominated by a viral re-post shrinks from
-    * multiplicity rows to one); (b) the hot-band exclusion index —
-    * band buckets whose COLLAPSED occupancy exceeds `maxBandOcc`
-    * (degenerate signatures: flat/tiny payloads hashing near 0), which
-    * `sigDedupIncrement` anti-joins off its state-probe side so a
-    * degenerate pile can never make every batch probe scan linearly in
-    * state occupancy. Returns (compactedState, hotBands); the caller
-    * swaps both in at its compaction cadence (occupancy is a corpus
-    * property — per-batch guarding would thrash). The index is
-    * ≤ 8·256 rows at 8-bit bands — knob-table sized, broadcast at
-    * probe time. */
-  def compactSigState(state: DataFrame, maxBandOcc: Int = 500)
+  /** Index COMPACTION at the caller's cadence (`KnobSchedule
+    * .compactionDue`), in the index's own key family: (a) exact
+    * collapse — one min-id representative per distinct signature VALUE
+    * (per distinct ordered frame-hash vector, `videoSeqReps`, when the
+    * index carries frames). Verdict-lossless: identical signatures sit
+    * at identical Hamming from any probe, so a viral re-post of
+    * multiplicity 10⁶ shrinks to one rep and still rejects its next
+    * copy. (b) The hot-bucket exclusion — buckets (per `frames`, the
+    * key `admitNearDups` probes on) whose COLLAPSED occupancy exceeds
+    * `maxBucketOcc`: degenerate signatures (flat/tiny payloads hashing
+    * near 0) that would make every probe scan linearly in state. A
+    * near-dup reachable only through hot buckets is then kept — the
+    * fused operators' documented recall trade; an exact copy still
+    * drops through any cold bucket of its rep. Each hot row stands for
+    * > maxBucketOcc reps, so the table is broadcast-sized. Returns
+    * (compactedIndex, hotBuckets); swap both in together. */
+  def compactAdmissionIndex(index: DataFrame,
+                            frames: FrameMatch = FrameMatch.Aligned(),
+                            maxBucketOcc: Int = 500)
       : (DataFrame, DataFrame) = {
-    val sig = state.select(col("doc_id"), col("dhash"))
-    val reps = sig.groupBy(col("dhash")).agg(min(col("doc_id")).as("doc_id"))
-    val repSig = sig.join(reps, Seq("dhash", "doc_id"), "left_semi")
-    val hot = repSig.select(col("dhash"),
-        posexplode(array((0 until 8).map(bi =>
-          shiftright(col("dhash"), 8 * bi).bitwiseAND(lit(255L))): _*))
-          .as(Seq("band_idx", "band_val")))
-      .groupBy(col("band_idx"), col("band_val"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > maxBandOcc)
-      .select(col("band_idx"), col("band_val"))
-    (repSig, hot)
+    val grouped = index.columns.contains("table_id")
+    // one row per signature: every row's keys start at position 0
+    val sig = sigRows(index.filter(
+      col(if (grouped) "table_id" else "band_idx") === 0))
+    val reps = if (sig.columns.contains("frame_idx")) videoSeqReps(sig)
+      else sig.join(sig.groupBy(col("dhash")).agg(min(col("doc_id"))
+        .as("doc_id")), Seq("dhash", "doc_id"), "left_semi")
+    val keyed = admissionKeyed(reps, grouped)
+    val keys = bucketCols(index, frames).map(col)
+    val hot = keyed.groupBy(keys: _*).agg(count(lit(1)).as("occ"))
+      .filter(col("occ") > maxBucketOcc)
+      .select(keys: _*)
+    (keyed, hot)
   }
 
-  /** `compactSigState`'s twin for the GROUPED index era: the same
-    * exact-hash collapse (verdict-lossless for admission — identical
-    * hashes sit at identical Hamming from any probe), with the hot
-    * exclusion computed over the 15 paired-group (table_id, tkey)
-    * buckets of the COLLAPSED occupancy — the key family
-    * `sigDedupIncrementIndexedGrouped` probes on. Unlike the 8-bit
-    * band index's ≤ 2048-row exclusion table, the grouped exclusion is
-    * bounded by the number of genuinely degenerate key buckets (the
-    * cap only trips on content pile-ups the collapse didn't absorb) —
-    * still broadcast-sized by construction, because each hot row
-    * represents > maxTableOcc collapsed reps. Returns
-    * (compactedState, hotKeys); rebuild the index from the compacted
-    * reps via `sigGroupIndex` and swap both in at compaction cadence. */
-  def compactSigStateGrouped(state: DataFrame, maxTableOcc: Int = 500)
-      : (DataFrame, DataFrame) = {
-    val sig = state.select(col("doc_id"), col("dhash"))
-    val reps = sig.groupBy(col("dhash")).agg(min(col("doc_id")).as("doc_id"))
-    val repSig = sig.join(reps, Seq("dhash", "doc_id"), "left_semi")
-    val hot = sigGroupKeyed(repSig)
-      .groupBy(col("table_id"), col("tkey"))
-      .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") > maxTableOcc)
-      .select(col("table_id"), col("tkey"))
-    (repSig, hot)
+  /** A signature table cut to the admission columns. */
+  private def sigRows(sig: DataFrame): DataFrame =
+    sig.select(Seq("doc_id", "frame_idx", "dhash")
+      .filter(sig.columns.contains).map(col): _*)
+
+  /** Signature rows exploded to their bucket keys — 8-bit bands or the
+    * l146 paired groups (`sigGroupKeyed`); frame_idx rides along. */
+  private def admissionKeyed(sig: DataFrame, grouped: Boolean): DataFrame =
+    if (grouped) sigGroupKeyed(sig)
+    else sig.select(sig.columns.map(col) :+
+      posexplode(array((0 until 8).map(bi =>
+        shiftright(col("dhash"), 8 * bi).bitwiseAND(lit(255L))): _*))
+        .as(Seq("band_idx", "band_val")): _*)
+
+  /** The bucket an index row sits in for the probe and its guard: the
+    * family's key, plus frame_idx when frames must align. */
+  private def bucketCols(index: DataFrame, frames: FrameMatch): Seq[String] = {
+    val family =
+      if (index.columns.contains("table_id")) Seq("table_id", "tkey")
+      else Seq("band_idx", "band_val")
+    frames match {
+      case FrameMatch.Aligned(_) if index.columns.contains("frame_idx") =>
+        "frame_idx" +: family
+      case _ => family
+    }
   }
 
   // ----------------------------------------------------- audio near-dup

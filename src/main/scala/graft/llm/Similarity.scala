@@ -436,8 +436,8 @@ object Similarity {
     * centroid, the policy applied at the finer scope.
     *
     * Output schema = semDedup's; `cell` is the composite refined id
-    * (see SubcellStride). DevScale's `semdedup` experiment is the
-    * receipt: under the schedule, per-vector within-cell pair volume
+    * (see SubcellStride). The `semdedup` scale receipt in BASELINE.md is
+    * the evidence: under the schedule, per-vector within-cell pair volume
     * grows ~√R at R× corpus (vs R× at fixed k) and the guard caps
     * max-cell occupancy near target. */
   def semDedupAuto(vectors: DataFrame, tau: Double = 0.35, iters: Int = 3,
@@ -621,9 +621,7 @@ object Similarity {
   private[graft] def refineHotCellsDeep(cs0: DataFrame, n: Long,
                                         nCells: Int, hotFactor: Double,
                                         iters: Int,
-                                        maxDepth: Int = 5,
-                                        onLevel: Option[(Int, Long) => Unit]
-                                          = None): DataFrame = {
+                                        maxDepth: Int = 5): DataFrame = {
     val targetOcc = math.max(1L, n / nCells)
     var cs = cs0
     var depth = 0
@@ -640,17 +638,8 @@ object Similarity {
         val rel = cs.join(broadcast(ranked), Seq("cell"))
           .select(col("nid"), col("ce"), col("cr").as("cell"),
             col("cent_sim"))
-        val next = refineHotCells(rel, n, nCells, hotFactor, iters)
+        cs = refineHotCells(rel, n, nCells, hotFactor, iters)
           .localCheckpoint()
-        // per-LEVEL receipt hook (dev harness only — two distinct-counts
-        // per level, never run unless a collector is passed): cells this
-        // level ADDED, measured against its OWN input, so multi-level
-        // recursion reports every level's splitting (the dense relabel
-        // preserves distinct counts, so levels compose)
-        onLevel.foreach(cb => cb(depth + 1,
-          next.select(col("cell")).distinct().count()
-            - cs.select(col("cell")).distinct().count()))
-        cs = next
       }
       depth += 1
     }
@@ -1325,18 +1314,13 @@ object Similarity {
     * scaladoc for the plan-shape and determinism story — this is a pure
     * code factoring, the subtree is identical. */
   private def pqApproxScores(vecs: DataFrame, queryMod: Int, m: Int,
-                             ks: Int, iters: Int, dim: Int,
-                             queryMax: Long): DataFrame = {
+                             ks: Int, iters: Int, dim: Int): DataFrame = {
     val cb = pqFit(vecs, m, ks, iters, dim).localCheckpoint(eager = false)
     // ONE narrow encode pass carries the corpus norm through (pqEncodeExt)
     // — the previous codes ⋈ norms id-join re-paired two projections of
     // the same scan (round 22)
     val cands = pqCands(vecs, cb, m, dim, ks)
-    // queryMax (DevScale only — defaults to no-op) pins the query set to
-    // the base replica so the scale experiment measures a FIXED query log
-    // against a growing catalog; the declared query never sets it
-    val queries = vecs.filter(
-      col("vec_id") % queryMod === 0 && col("vec_id") < queryMax)
+    val queries = vecs.filter(col("vec_id") % queryMod === 0)
     pqAdcScores(queries, cands, cb, m, dim)
   }
 
@@ -1466,11 +1450,9 @@ object Similarity {
 
   def pqRerankTopK(vecs: DataFrame, k: Int = 3, shortM: Int = 20,
                    queryMod: Int = 20, m: Int = 16, ks: Int = 16,
-                   iters: Int = 2, dim: Int = 64,
-                   queryMax: Long = Long.MaxValue): DataFrame = {
+                   iters: Int = 2, dim: Int = 64): DataFrame = {
     val cb = pqFit(vecs, m, ks, iters, dim).localCheckpoint(eager = false)
-    val queries = vecs.filter(
-      col("vec_id") % queryMod === 0 && col("vec_id") < queryMax)
+    val queries = vecs.filter(col("vec_id") % queryMod === 0)
     pqServeCands(queries, vecs, cb, pqCands(vecs, cb, m, dim, ks),
       k, shortM, m, dim)
   }
@@ -1706,17 +1688,15 @@ object Similarity {
   }
 
   /** L119 — the fused fit+serve form (the declared-query shape, queries
-    * drawn from the corpus by the l95 sampling rule). queryMax is the
-    * DevScale fixed-query-log pin; the declared query never sets it. */
+    * drawn from the corpus by the l95 sampling rule). */
   def ivfPqRerankTopK(vecs: DataFrame, k: Int = 3, nProbe: Int = 2,
                       shortM: Int = 20, queryMod: Int = 20,
                       nCells: Int = 16, coarseIters: Int = 3, m: Int = 16,
-                      ks: Int = 16, pqIters: Int = 2, dim: Int = 64,
-                      queryMax: Long = Long.MaxValue): DataFrame = {
+                      ks: Int = 16, pqIters: Int = 2,
+                      dim: Int = 64): DataFrame = {
     val (cents, rcb, index) =
       ivfPqFit(vecs, nCells, coarseIters, m, ks, pqIters, dim)
-    val queries = vecs.filter(
-      col("vec_id") % queryMod === 0 && col("vec_id") < queryMax)
+    val queries = vecs.filter(col("vec_id") % queryMod === 0)
     ivfPqServeTopK(queries, vecs, cents, rcb, index,
       k, nProbe, shortM, m, ks, dim)
   }
@@ -1744,8 +1724,7 @@ object Similarity {
                        ks: Int = 16, iters: Int = 2,
                        dim: Int = 64): DataFrame = {
     val maxM = shortMs.max
-    val approx = pqApproxScores(vecs, queryMod, m, ks, iters, dim,
-      Long.MaxValue)
+    val approx = pqApproxScores(vecs, queryMod, m, ks, iters, dim)
     val ranked = approx.groupBy(col("qid"))
       .agg(call_function("bounded_top_m",
         col("approx_sim"), col("nid"), lit(maxM)).as("top"))
@@ -2114,9 +2093,9 @@ object Similarity {
     * some config's top-k (≤ |probes|·k per query) materialize — the
     * first cut checkpointed the full |Q|·probe-cells sims table and paid
     * a materialization tax (measured at 10× embeddings: 30.2 s vs this
-    * form's 23.3 s). Measured honestly (DevScale `sweepshare`), the audit
-    * is TRUTH-DOMINATED: the exact leg is 9.9 s of the 23.3, and the
-    * shared probe side lands ≈ the sum of separate per-config IVF runs
+    * form's 23.3 s). Measured honestly (the `sweepshare` receipt), the
+    * audit is TRUTH-DOMINATED: the exact leg is 9.9 s of the 23.3, and
+    * the shared probe side lands ≈ the sum of separate per-config IVF runs
     * (13.4 vs 13.6 s — the single multi-rank window trades the saved
     * re-scans for a wider per-row aggregate). What the sweep durably buys
     * is ONE query instead of |probes|+1 (single truth evaluation, single

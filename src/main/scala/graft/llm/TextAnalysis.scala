@@ -1333,7 +1333,7 @@ object TextAnalysis {
       .agg(sum(col("n_docs")).as("n_docs"),
         count(lit(1)).as("n_sources"),
         min(col("first_doc")).as("first_doc"))
-    broadcast(canaries).join(agg, Seq("canary_id", "phrase"), "left")
+    canaries.join(agg, Seq("canary_id", "phrase"), "left")
       .select(col("canary_id"), col("phrase"),
         coalesce(col("n_docs"), lit(0L)).as("n_docs"),
         coalesce(col("n_sources"), lit(0L)).as("n_sources"),

@@ -299,7 +299,7 @@ private[queries] trait LlmDeclaredMultimodal extends LlmDeclaredBase {
     * max_band_occ) config, hot buckets and verified pairs next to the
     * widest-lossless unguarded TRUTH leg; recall = the fraction of true
     * radius-2 pairs the guard sacrifices at that width — the table read
-    * before fixing `KnobSchedule.dhashBandBits` (the DevScale `imagedup`
+    * before fixing `KnobSchedule.dhashBandBits` (BASELINE.md's `imagedup`
     * receipt: 0.4% survives fixed 8-bit at 10×, 100% at scheduled
     * 16-bit). One decode+hash pass shared by every leg. */
   protected val l126 = {

@@ -627,7 +627,7 @@ class LlmPipelineSpec extends SparkSpec {
     // forced via targetOcc = 0 (threshold = targetOcc·2^16 reps — the
     // spec-scale analogue of crossing 4.2M reps; the rep-count crossing
     // itself is pinned in LlmSpec's switch test and priced in the
-    // DevScale offsetgrouped/pipeline receipts).
+    // offsetgrouped/pipeline receipts in BASELINE.md).
     import graft.llm.{KnobSchedule, Multimodal, Similarity}
     val tmpPath = java.nio.file.Files.createTempDirectory("graft_v5_e2e")
     val tmp = tmpPath.toString

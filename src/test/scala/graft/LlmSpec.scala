@@ -438,7 +438,7 @@ class LlmSpec extends SparkSpec {
   test("ivfPq serving on a corpus SMALLER than ks: pqFit trains a narrow " +
     "codebook (min(ks, n) codewords per sub) and the ADC stride follows " +
     "the LUT's actual width, never the nominal ks") {
-    // Regression (round 19, found by the DevScale pipeline receipt): a
+    // Regression (round 19, found by the pipeline scale receipt): a
     // curated survivor set of n < 16 trains 16 sub-codebooks of n
     // codewords each; the ADC position arithmetic at a fixed ks stride
     // then addresses past the |lut| = m·n table and the serve THROWS
@@ -4265,7 +4265,7 @@ class LlmSpec extends SparkSpec {
 
   test("refineHotCellsDeep: a near-duplicate pile that defeats one guard " +
     "level drains over iterated levels") {
-    // the orthogonal-noise pile (the DevScale semdedupskew shape): 120
+    // the orthogonal-noise pile (the semdedupskew scale-receipt shape): 120
     // near-identical vectors — unit e0 + tiny noise in a rotating
     // dimension — plus 40 scattered. One refine level inits ksub
     // subcentroids on near-identical members and the cosine argmax

@@ -811,6 +811,19 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin"))
   }
 
+  test("l99: the canary readout carries no join hint — a broadcast of the " +
+    "preserved side of a left outer join is one Spark ignores") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    import spark.implicits._
+    val canaries = Seq((1L, "__a__"), (2L, "__b__")).toDF("canary_id", "phrase")
+    val cells = Seq((1L, "__a__", "web", 3L, 7L))
+      .toDF("canary_id", "phrase", "source", "n_docs", "first_doc")
+    val plan = graft.llm.TextAnalysis.canaryReport(cells, canaries)
+      .queryExecution.analyzed
+    assert(plan.collectFirst { case h: ResolvedHint => h }.isEmpty,
+      plan.treeString)
+  }
+
   test("global plan discipline: no CartesianProduct in ANY declared query; " +
     "BroadcastNestedLoopJoin only where a tiny side is broadcast by design") {
     // Every name here broadcasts a provably-small side into a non-equi or

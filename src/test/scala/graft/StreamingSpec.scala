@@ -1524,47 +1524,79 @@ class StreamingSpec extends SparkSpec {
       modelRows(UnigramLm.trainRounds(docs)))
   }
 
+  /** A grid-aligned 36×16 P6 raster (the LlmSpec receipt geometry);
+    * `shift` brightens it into a near-duplicate of the same seed. */
+  private def ppmBlob(id: Long, seed: Int,
+                      shift: Int = 0): graft.llm.Multimodal.BlobRow = {
+    val (w, h) = (36, 16)
+    val header = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
+    val out = new Array[Byte](header.length + w * h * 3)
+    System.arraycopy(header, 0, out, 0, header.length)
+    for (y <- 0 until h; x <- 0 until w; c <- 0 until 3)
+      out(header.length + (y * w + x) * 3 + c) =
+        (((x * 7 + y * 13 + seed * 31 + (x * y * (seed + 3)) % 97) % 220)
+          + shift).toByte
+    graft.llm.Multimodal.BlobRow(id, out)
+  }
+
+  /** A PCM16 mono 8 kHz WAV of the given samples. */
+  private def wavBlob(id: Long, ss: Seq[Int]): graft.llm.Multimodal.BlobRow = {
+    val out = new Array[Byte](44 + 2 * ss.length)
+    def le32(off: Int, v: Int): Unit = (0 until 4).foreach(i =>
+      out(off + i) = ((v >> (8 * i)) & 0xff).toByte)
+    def le16(off: Int, v: Int): Unit = (0 until 2).foreach(i =>
+      out(off + i) = ((v >> (8 * i)) & 0xff).toByte)
+    def tag(off: Int, s: String): Unit =
+      System.arraycopy(s.getBytes("US-ASCII"), 0, out, off, 4)
+    tag(0, "RIFF"); le32(4, 36 + 2 * ss.length); tag(8, "WAVE")
+    tag(12, "fmt "); le32(16, 16); le16(20, 1); le16(22, 1)
+    le32(24, 8000); le32(28, 16000); le16(32, 2); le16(34, 16)
+    tag(36, "data"); le32(40, 2 * ss.length)
+    ss.zipWithIndex.foreach { case (s, k) => le16(44 + 2 * k, s & 0xffff) }
+    graft.llm.Multimodal.BlobRow(id, out)
+  }
+
+  /** 130 seeded samples; gain-scaling them (×k) keeps the clip hash. */
+  private def wavSamples(seed: Int): Seq[Int] =
+    (0 until 130).map(k => ((k * 37 + seed * 101 + (k * k * seed) % 61)
+      % 900) - 450)
+
+  /** Verdict map of an admission result. */
+  private def verdictMap(p: (DataFrame, DataFrame)): Map[Long, String] =
+    p._1.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
   test("S39: streaming image near-dup admission — ascending-id arrivals " +
     "reproduce the fused l122 kept/dropped sets; state carries ALL seen") {
     // The l122 deployment shape (the l52/S34/S37 arrival-order
-    // discipline on the perceptual plane): the (doc_id, dhash) table of
-    // every seen image persists; arriving blob batches pay their own
-    // codec-boundary dHash, band-probe the state plus their earlier
-    // batch members, and append. Fixture: grid-aligned 36×16 images
-    // (the LlmSpec receipt geometry) with brightness-shifted duplicates
-    // planted both WITHIN a batch and ACROSS the batch boundary.
+    // discipline on the perceptual plane): the band index of every
+    // seen image persists; arriving blob batches pay their own
+    // codec-boundary dHash, probe the index plus their earlier batch
+    // members, and append. Brightness-shifted duplicates are planted
+    // both WITHIN a batch and ACROSS the batch boundary.
     import StreamOps.StreamBlob
     import graft.llm.Multimodal
-    def img(id: Long, seed: Int, shift: Int = 0): Multimodal.BlobRow = {
-      val (w, h) = (36, 16)
-      val header = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
-      val out = new Array[Byte](header.length + w * h * 3)
-      System.arraycopy(header, 0, out, 0, header.length)
-      for (y <- 0 until h; x <- 0 until w; c <- 0 until 3)
-        out(header.length + (y * w + x) * 3 + c) =
-          (((x * 7 + y * 13 + seed * 31 + (x * y * (seed + 3)) % 97) % 220)
-            + shift).toByte
-      Multimodal.BlobRow(id, out)
-    }
-    val batch1 = Seq(img(0, 0), img(1, 1), img(2, 2), img(3, 3),
-      img(6, 2, shift = 20)) // within-batch near-dup of id 2
-    val batch2 = Seq(img(10, 1, shift = 15), // cross-batch near-dup of id 1
-      img(11, 7), img(12, 8), img(14, 7, shift = 10)) // 14 dups 11 in-batch
+    val batch1 = Seq(ppmBlob(0, 0), ppmBlob(1, 1), ppmBlob(2, 2),
+      ppmBlob(3, 3),
+      ppmBlob(6, 2, shift = 20)) // within-batch near-dup of id 2
+    val batch2 = Seq(ppmBlob(10, 1, shift = 15), // cross-batch near-dup of 1
+      ppmBlob(11, 7), ppmBlob(12, 8),
+      ppmBlob(14, 7, shift = 10)) // 14 dups 11 in-batch
     val all = (batch1 ++ batch2).toDF()
     val fusedDropped = Multimodal.imageNearDupsFromBlobs(spark, all,
         maxHamming = 2, maxBandOcc = 100000)
       .collect().map(_.getLong(1)).toSet
-    var state = Multimodal.dHash(spark, all.limit(0)).toDF()
-      .select(col("doc_id"), col("dhash")).localCheckpoint()
+    var index = Multimodal.admissionIndex(
+      Multimodal.dHash(spark, all.limit(0)).toDF()).localCheckpoint()
     val out = scala.collection.mutable.ArrayBuffer[(Long, String)]()
     val in = MemoryStream[StreamBlob]
     val q = in.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (verdicts, sigs) = Multimodal.imageDedupIncrement(spark,
-          batch.toDF().select(col("doc_id"), col("payload")), state,
-          maxHamming = 2)
+        val (verdicts, delta) = Multimodal.admitNearDups(
+          Multimodal.dHash(spark,
+            batch.toDF().select(col("doc_id"), col("payload"))).toDF(),
+          index, maxHamming = 2)
         out ++= verdicts.collect().map(r => (r.getLong(0), r.getString(1)))
-        state = state.unionByName(sigs).localCheckpoint()
+        index = index.unionByName(delta).localCheckpoint()
         ()
       }.start()
     def sb(b: Multimodal.BlobRow) = StreamBlob(b.doc_id, b.payload,
@@ -1578,64 +1610,49 @@ class StreamingSpec extends SparkSpec {
     // kept/dropped equals the fused pair table of the drained corpus
     assert(verdicts.filter(_._2 != "kept").keySet === fusedDropped)
     // the verdict CATEGORIES witness both legs: 6/14 dup within their
-    // own batch, 10 against the persisted state
+    // own batch, 10 against the persisted index
     assert(verdicts(6L) === "dup_batch")
     assert(verdicts(14L) === "dup_batch")
     assert(verdicts(10L) === "dup_corpus")
     assert(Seq(0L, 1L, 2L, 3L, 11L, 12L).forall(verdicts(_) == "kept"))
+    // the index carries ALL seen images, dropped included
+    assert(index.select(col("doc_id")).distinct().count() === 9L)
   }
 
   test("S41: streaming audio near-dup admission — ascending-id arrivals " +
     "reproduce the fused pair table; gain-scaled re-uploads verdict both " +
     "within-batch and across the boundary") {
     // S39's arrival-order discipline on the audio plane, through the
-    // shared sig-level core: the carried state is the (doc_id, dhash)
-    // gradient-sign table of every seen clip; each batch pays its own
+    // same admission core: the carried index holds the gradient-sign
+    // signature of every seen clip; each batch pays its own
     // codec-boundary audioHash. Planted duplicates are GAIN-scaled
     // (×k samples — hash-identical by envelope-gradient invariance),
     // within a batch and across the boundary.
     import StreamOps.StreamBlob
     import graft.llm.Multimodal
-    def wav(id: Long, ss: Seq[Int]): Multimodal.BlobRow = {
-      val out = new Array[Byte](44 + 2 * ss.length)
-      def le32(off: Int, v: Int): Unit = (0 until 4).foreach(i =>
-        out(off + i) = ((v >> (8 * i)) & 0xff).toByte)
-      def le16(off: Int, v: Int): Unit = (0 until 2).foreach(i =>
-        out(off + i) = ((v >> (8 * i)) & 0xff).toByte)
-      def tag(off: Int, s: String): Unit =
-        System.arraycopy(s.getBytes("US-ASCII"), 0, out, off, 4)
-      tag(0, "RIFF"); le32(4, 36 + 2 * ss.length); tag(8, "WAVE")
-      tag(12, "fmt "); le32(16, 16); le16(20, 1); le16(22, 1)
-      le32(24, 8000); le32(28, 16000); le16(32, 2); le16(34, 16)
-      tag(36, "data"); le32(40, 2 * ss.length)
-      ss.zipWithIndex.foreach { case (s, k) => le16(44 + 2 * k, s & 0xffff) }
-      Multimodal.BlobRow(id, out)
-    }
-    def samples(seed: Int): Seq[Int] =
-      (0 until 130).map(k => ((k * 37 + seed * 101 + (k * k * seed) % 61)
-        % 900) - 450)
-    val batch1 = Seq(wav(0, samples(0)), wav(1, samples(1)),
-      wav(2, samples(2)), wav(3, samples(3)),
-      wav(6, samples(2).map(_ * 4))) // within-batch gain-dup of id 2
-    val batch2 = Seq(wav(10, samples(1).map(_ * 2)), // cross-batch dup of 1
-      wav(11, samples(7)), wav(12, samples(8)),
-      wav(14, samples(7).map(_ * 8))) // 14 dups 11 in-batch
+    val batch1 = Seq(wavBlob(0, wavSamples(0)), wavBlob(1, wavSamples(1)),
+      wavBlob(2, wavSamples(2)), wavBlob(3, wavSamples(3)),
+      wavBlob(6, wavSamples(2).map(_ * 4))) // within-batch gain-dup of id 2
+    val batch2 = Seq(wavBlob(10, wavSamples(1).map(_ * 2)), // cross-batch dup of 1
+      wavBlob(11, wavSamples(7)), wavBlob(12, wavSamples(8)),
+      wavBlob(14, wavSamples(7).map(_ * 8))) // 14 dups 11 in-batch
     val all = (batch1 ++ batch2).toDF()
     val fusedDropped = Multimodal.imageNearDupsFromSigs(
         Multimodal.audioHash(spark, all).toDF(),
         maxHamming = 2, maxBandOcc = 100000)
       .collect().map(_.getLong(1)).toSet
-    var state = Multimodal.audioHash(spark, all.limit(0)).toDF()
-      .select(col("doc_id"), col("dhash")).localCheckpoint()
+    var index = Multimodal.admissionIndex(
+      Multimodal.audioHash(spark, all.limit(0)).toDF()).localCheckpoint()
     val out = scala.collection.mutable.ArrayBuffer[(Long, String)]()
     val in = MemoryStream[StreamBlob]
     val q = in.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val (verdicts, sigs) = Multimodal.audioDedupIncrement(spark,
-          batch.toDF().select(col("doc_id"), col("payload")), state,
-          maxHamming = 2)
+        val (verdicts, delta) = Multimodal.admitNearDups(
+          Multimodal.audioHash(spark,
+            batch.toDF().select(col("doc_id"), col("payload"))).toDF(),
+          index, maxHamming = 2)
         out ++= verdicts.collect().map(r => (r.getLong(0), r.getString(1)))
-        state = state.unionByName(sigs).localCheckpoint()
+        index = index.unionByName(delta).localCheckpoint()
         ()
       }.start()
     def sb(b: Multimodal.BlobRow) = StreamBlob(b.doc_id, b.payload,
@@ -1657,13 +1674,14 @@ class StreamingSpec extends SparkSpec {
     "reproduce the fused pair table; exact re-posts verdict within-batch " +
     "and across the boundary; compaction is verdict-lossless") {
     // S39/S41's arrival-order discipline on the frame plane: the
-    // carried state is the (doc_id, frame_idx, dhash) table of every
-    // seen clip; each batch pays its own codec-boundary container walk.
-    // Planted duplicates are EXACT re-posts (same text ⇒ byte-identical
-    // containers ⇒ per-frame Hamming 0), within a batch and across the
-    // boundary.
+    // carried index holds the per-frame signatures of every seen clip;
+    // each batch pays its own codec-boundary container walk and probes
+    // frame-ALIGNED. Planted duplicates are EXACT re-posts (same text ⇒
+    // byte-identical containers ⇒ per-frame Hamming 0), within a batch
+    // and across the boundary.
     import StreamOps.StreamDoc
     import graft.llm.Multimodal
+    import graft.llm.Multimodal.FrameMatch.Aligned
     val texts = Map(
       0L -> "first clip alpha content", 1L -> "second clip beta content",
       2L -> "third clip gamma content", 3L -> "fourth clip delta content",
@@ -1677,10 +1695,11 @@ class StreamingSpec extends SparkSpec {
     val fusedDropped = Multimodal.videoNearDups(spark, all,
         maxHamming = 2, maxBandOcc = 100000, minFrames = 2)
       .collect().map(_.getLong(1)).toSet
-    def blobs(ids: Seq[Long]) = Multimodal.encodeVideo(spark,
-      ids.map(i => (i, texts(i))).toDF("doc_id", "text")).toDF()
-    var state = Multimodal.videoFrameHashes(spark, blobs(Seq.empty)).toDF()
-      .select(col("doc_id"), col("frame_idx"), col("dhash"))
+    def frameSigs(docs: Seq[(Long, String)]) = Multimodal.videoFrameHashes(
+      spark, Multimodal.encodeVideo(spark, docs.toDF("doc_id", "text"))
+        .toDF()).toDF()
+    val frames = Aligned(minFrames = 2)
+    var index = Multimodal.admissionIndex(frameSigs(Seq.empty))
       .localCheckpoint()
     val out = scala.collection.mutable.ArrayBuffer[(Long, String)]()
     val in = MemoryStream[StreamDoc]
@@ -1688,10 +1707,11 @@ class StreamingSpec extends SparkSpec {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val ids = batch.toDF().select(col("doc_id")).collect()
           .map(_.getLong(0)).toSeq
-        val (verdicts, sigs) = Multimodal.videoDedupIncrement(spark,
-          blobs(ids), state, maxHamming = 2, minFrames = 2)
+        val (verdicts, delta) = Multimodal.admitNearDups(
+          frameSigs(ids.map(i => (i, texts(i)))), index, maxHamming = 2,
+          frames = frames)
         out ++= verdicts.collect().map(r => (r.getLong(0), r.getString(1)))
-        state = state.unionByName(sigs).localCheckpoint()
+        index = index.unionByName(delta).localCheckpoint()
         ()
       }.start()
     def sd(id: Long) = StreamDoc(id, texts(id),
@@ -1707,35 +1727,30 @@ class StreamingSpec extends SparkSpec {
     assert(verdicts(14L) === "dup_batch")
     assert(verdicts(10L) === "dup_corpus")
     assert(Seq(0L, 1L, 2L, 3L, 11L, 12L).forall(verdicts(_) == "kept"))
-    // compaction swap: collapsed state + hot index leave a fresh
+    // compaction swap: collapsed index + hot exclusion leave a fresh
     // probe's verdict unchanged (exact-sequence collapse is lossless)
-    val (reps, hot) = Multimodal.compactVideoSigState(state)
-    val probe = Multimodal.videoDedupIncrement(spark,
-      Multimodal.encodeVideo(spark,
-        Seq((20L, "totally novel probe clip text")).toDF("doc_id", "text"))
-        .toDF(),
-      reps.localCheckpoint(), maxHamming = 2, minFrames = 2,
-      hotBands = Some(hot))._1.collect()
-    assert(probe.length === 1 && probe.head.getString(1) === "kept")
-    val probeDup = Multimodal.videoDedupIncrement(spark,
-      Multimodal.encodeVideo(spark,
-        Seq((21L, "first clip alpha content")).toDF("doc_id", "text"))
-        .toDF(),
-      reps.localCheckpoint(), maxHamming = 2, minFrames = 2,
-      hotBands = Some(hot))._1.collect()
-    assert(probeDup.head.getString(1) === "dup_corpus")
+    val (reps0, hot) = Multimodal.compactAdmissionIndex(index, frames)
+    val reps = reps0.localCheckpoint()
+    def probe(id: Long, text: String) = Multimodal.admitNearDups(
+      frameSigs(Seq(id -> text)), reps, maxHamming = 2, frames = frames,
+      hotBuckets = Some(hot))._1.collect()
+    val novel = probe(20L, "totally novel probe clip text")
+    assert(novel.length === 1 && novel.head.getString(1) === "kept")
+    assert(probe(21L, "first clip alpha content").head.getString(1)
+      === "dup_corpus")
   }
 
   test("S43: streaming OFFSET-tolerant video admission — a head-trimmed " +
     "re-edit drops within-batch and across the boundary where the " +
     "frame-aligned S42 probe keeps it; compaction swap is lossless") {
     // l136's displacement-window semantics on the streaming rung: the
-    // carried state is the same per-frame sig table as S42, the probe
-    // joins hash bands frame-BLIND with a ±1 displacement window. The
-    // planted dups are head-trims (the l137 production trim: frame 0
-    // cut, so trim.frame f IS source.frame f+1) and one exact re-post.
+    // carried index is the same per-frame one as S42, the probe joins
+    // frame-BLIND with a ±1 displacement window. The planted dups are
+    // head-trims (the l137 production trim: frame 0 cut, so trim.frame f
+    // IS source.frame f+1) and one exact re-post.
     import StreamOps.StreamDoc
     import graft.llm.Multimodal
+    import graft.llm.Multimodal.FrameMatch.{Aligned, Offset}
     val baseTexts = Map(
       0L -> "first clip alpha content", 1L -> "second clip beta content",
       2L -> "third clip gamma content", 11L -> "tenth clip epsilon words")
@@ -1753,6 +1768,7 @@ class StreamingSpec extends SparkSpec {
       .localCheckpoint()
     def blobs(ids: Seq[Long]) =
       allBlobs.filter(col("doc_id").isin(ids: _*))
+    def frameSigs(b: DataFrame) = Multimodal.videoFrameHashes(spark, b).toDF()
     val batch1 = Seq(0L, 1L, 2L, 6L)
     val batch2 = Seq(10L, 11L, 12L, 14L)
     val arrived = batch1 ++ batch2
@@ -1762,8 +1778,8 @@ class StreamingSpec extends SparkSpec {
         blobs(arrived), maxHamming = 0, maxBandOcc = 100000,
         minFrames = 2, maxOffset = 1)
       .collect().map(_.getLong(1)).toSet
-    var state = Multimodal.videoFrameHashes(spark, blobs(Seq.empty)).toDF()
-      .select(col("doc_id"), col("frame_idx"), col("dhash"))
+    val offset = Offset(minFrames = 2, maxOffset = 1)
+    var index = Multimodal.admissionIndex(frameSigs(blobs(Seq.empty)))
       .localCheckpoint()
     var alignedKept10 = false
     val out = scala.collection.mutable.ArrayBuffer[(Long, String)]()
@@ -1775,15 +1791,15 @@ class StreamingSpec extends SparkSpec {
         if (ids.contains(10L)) {
           // the S42 frame-aligned probe is BLIND to the trim — witnessed
           // from the streaming side before the offset probe verdicts it
-          val aligned = Multimodal.videoDedupIncrement(spark,
-            blobs(Seq(10L)), state, maxHamming = 0, minFrames = 2)
+          val aligned = Multimodal.admitNearDups(frameSigs(blobs(Seq(10L))),
+            index, maxHamming = 0, frames = Aligned(minFrames = 2))
             ._1.collect()
           alignedKept10 = aligned.head.getString(1) == "kept"
         }
-        val (verdicts, sigs) = Multimodal.videoOffsetDedupIncrement(spark,
-          blobs(ids), state, maxHamming = 0, minFrames = 2, maxOffset = 1)
+        val (verdicts, delta) = Multimodal.admitNearDups(
+          frameSigs(blobs(ids)), index, maxHamming = 0, frames = offset)
         out ++= verdicts.collect().map(r => (r.getLong(0), r.getString(1)))
-        state = state.unionByName(sigs).localCheckpoint()
+        index = index.unionByName(delta).localCheckpoint()
         ()
       }.start()
     def sd(id: Long) = StreamDoc(id, s"clip $id",
@@ -1804,107 +1820,24 @@ class StreamingSpec extends SparkSpec {
       "the frame-aligned probe should keep the trim the offset probe drops")
     // compaction swap: exact-sequence collapse + the frame-BLIND hot
     // index leave a fresh trim probe's verdict unchanged
-    val (reps, hot) = Multimodal.compactVideoSigStateOffset(state)
-    val probeTrim = Multimodal.videoOffsetDedupIncrement(spark,
-      Multimodal.videoFrameSampleContainer(spark,
+    val (reps, hot) = Multimodal.compactAdmissionIndex(index, offset)
+    val probeTrim = Multimodal.admitNearDups(
+      frameSigs(Multimodal.videoFrameSampleContainer(spark,
           enc.filter(col("doc_id") === 2L), stride = 1, from = 1).toDF()
-        .select(lit(30L).as("doc_id"), col("payload")),
-      reps.localCheckpoint(), maxHamming = 0, minFrames = 2,
-      maxOffset = 1, hotBands = Some(hot))._1.collect()
+        .select(lit(30L).as("doc_id"), col("payload"))),
+      reps.localCheckpoint(), maxHamming = 0, frames = offset,
+      hotBuckets = Some(hot))._1.collect()
     assert(probeTrim.length === 1
       && probeTrim.head.getString(1) === "dup_corpus")
-  }
-
-  test("grouped offset admission (round 19): the paired-group frame-blind " +
-    "probe is verdict-identical to the banded S43/S45 probe on both " +
-    "planes, and grouped offset compaction is verdict-lossless") {
-    import graft.llm.Multimodal
-    val baseTexts = Map(
-      0L -> "first clip alpha content", 1L -> "second clip beta content",
-      2L -> "third clip gamma content", 11L -> "tenth clip epsilon words")
-    val enc = Multimodal.encodeVideo(spark,
-      baseTexts.toSeq.toDF("doc_id", "text")).toDF().localCheckpoint()
-    val state = Multimodal.videoFrameHashes(spark, enc).toDF()
-      .select(col("doc_id"), col("frame_idx"), col("dhash"))
-      .localCheckpoint()
-    // probe batch: a head-trim of 2 (the S43 duplicate class), an exact
-    // re-post of 0, and a novel clip
-    val trim = Multimodal.videoFrameSampleContainer(spark,
-        enc.filter(col("doc_id") === 2L), stride = 1, from = 1).toDF()
-      .select(lit(30L).as("doc_id"), col("payload"))
-    val repost = enc.filter(col("doc_id") === 0L)
-      .select(lit(31L).as("doc_id"), col("payload"))
-    val novel = Multimodal.encodeVideo(spark,
-      Seq((32L, "completely different zeta")).toDF("doc_id", "text")).toDF()
-    val batch = trim.unionByName(repost).unionByName(novel)
-      .localCheckpoint()
-    def vmap(p: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) =
-      p._1.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val banded = vmap(Multimodal.videoOffsetDedupIncrement(spark, batch,
-      state, maxHamming = 0, minFrames = 2, maxOffset = 1))
-    val grouped = vmap(Multimodal.videoOffsetDedupIncrementGrouped(spark,
-      batch, state, maxHamming = 0, minFrames = 2, maxOffset = 1))
-    assert(grouped === banded)
-    assert(grouped(30L) === "dup_corpus" && grouped(31L) === "dup_corpus"
-      && grouped(32L) === "kept")
-    // grouped compaction: exact-sequence collapse + (table_id, tkey)
-    // exclusion — the trim's verdict survives the swap at a dormant cap
-    val (reps, hotK0) = Multimodal.compactVideoSigStateOffsetGrouped(state)
-    val hotK = hotK0.localCheckpoint()
-    assert(hotK.count() === 0L)
-    assert(vmap(Multimodal.videoOffsetDedupIncrementGrouped(spark, batch,
-      reps.localCheckpoint(), maxHamming = 0, minFrames = 2,
-      maxOffset = 1, hotKeys = Some(hotK)))(30L) === "dup_corpus")
-    // the audio plane through the same keyed core: a window-trimmed
-    // re-upload verdicts dup on both key families identically
-    val aEnc = Multimodal.encodeWav(spark,
-        Seq((1L, "a quick trim fixture text ~")).toDF("doc_id", "text"))
-      .toDF().localCheckpoint()
-    val aState = Multimodal.audioWindowHashes(spark, aEnc).toDF()
-      .select(col("doc_id"), col("win_idx").as("frame_idx"), col("dhash"))
-      .localCheckpoint()
-    val aTrim = Multimodal.audioTrimHeadContainer(spark, aEnc,
-        nSamples = 65).toDF()
-      .select(lit(40L).as("doc_id"), col("payload")).localCheckpoint()
-    val ab = vmap(Multimodal.audioOffsetDedupIncrement(spark, aTrim,
-      aState, maxHamming = 0, minWindows = 1, maxOffset = 1))
-    val ag = vmap(Multimodal.audioOffsetDedupIncrementGrouped(spark, aTrim,
-      aState, maxHamming = 0, minWindows = 1, maxOffset = 1))
-    assert(ag === ab && ag(40L) === "dup_corpus")
-    // beyond the pigeonhole guarantee the grouped probe refuses loudly
-    intercept[IllegalArgumentException](
-      Multimodal.videoOffsetDedupIncrementGrouped(spark, batch, state,
-        maxHamming = 5))
-    // the frame-ALIGNED S42 probe through the same key family: verdict-
-    // identical to the banded form — the exact re-post drops, the trim
-    // is KEPT (the aligned plane's documented blindness, preserved
-    // across the switch), the novel clip is kept; the aligned grouped
-    // compaction swap leaves the re-post's verdict unchanged
-    val alignedB = vmap(Multimodal.videoDedupIncrement(spark, batch,
-      state, maxHamming = 0, minFrames = 2))
-    val alignedG = vmap(Multimodal.videoDedupIncrementGrouped(spark,
-      batch, state, maxHamming = 0, minFrames = 2))
-    assert(alignedG === alignedB)
-    assert(alignedG(31L) === "dup_corpus" && alignedG(30L) === "kept"
-      && alignedG(32L) === "kept")
-    val (aReps, aHot0) = Multimodal.compactVideoSigStateGrouped(state)
-    val aHot = aHot0.localCheckpoint()
-    assert(aHot.count() === 0L)
-    assert(vmap(Multimodal.videoDedupIncrementGrouped(spark, batch,
-      aReps.localCheckpoint(), maxHamming = 0, minFrames = 2,
-      hotKeys = Some(aHot)))(31L) === "dup_corpus")
-    intercept[IllegalArgumentException](
-      Multimodal.videoDedupIncrementGrouped(spark, batch, state,
-        maxHamming = 5))
   }
 
   test("S44: streaming FLIP-INVARIANT image admission — a mirrored " +
     "re-post drops within-batch and across the boundary where the " +
     "plain-dHash S39 probe keeps it") {
-    // S39's discipline on the canonical signature: the carried state is
-    // the (doc_id, canonical dhash) table; a horizontally mirrored
-    // re-upload of a seen image canonicalizes to the SAME signature and
-    // drops. Planted mirrors are the l139 production flip itself.
+    // S39's discipline on the canonical signature: the carried index
+    // holds canonical dhashes; a horizontally mirrored re-upload of a
+    // seen image canonicalizes to the SAME signature and drops. Planted
+    // mirrors are the l139 production flip itself.
     import StreamOps.StreamBlob
     import graft.llm.Multimodal
     val baseTexts = Map(
@@ -1928,8 +1861,8 @@ class StreamingSpec extends SparkSpec {
         spark, blobs(batch1 ++ batch2), maxHamming = 0,
         maxBandOcc = 100000)
       .collect().map(_.getLong(1)).toSet
-    var state = Multimodal.dHash(spark, allBlobs.limit(0)).toDF()
-      .select(col("doc_id"), col("dhash")).localCheckpoint()
+    var index = Multimodal.admissionIndex(
+      Multimodal.dHash(spark, allBlobs.limit(0)).toDF()).localCheckpoint()
     var plainKept10 = false
     val out = scala.collection.mutable.ArrayBuffer[(Long, String)]()
     val in = MemoryStream[StreamBlob]
@@ -1938,20 +1871,21 @@ class StreamingSpec extends SparkSpec {
         val ids = batch.toDF().select(col("doc_id")).collect()
           .map(_.getLong(0)).toSeq
         if (ids.contains(10L)) {
-          // the plain-dHash S39 probe is BLIND to the mirror — but its
-          // state holds canonical sigs here, so probe with a plain
-          // dHash batch against a PLAIN state built from the originals
-          val plainState = Multimodal.dHash(spark,
-              blobs(Seq(0L, 1L, 2L, 6L))).toDF()
-            .select(col("doc_id"), col("dhash")).localCheckpoint()
-          val plain = Multimodal.imageDedupIncrement(spark,
-            blobs(Seq(10L)), plainState, maxHamming = 0)._1.collect()
+          // the plain-dHash S39 probe is BLIND to the mirror — but the
+          // carried index holds canonical sigs, so probe with a plain
+          // dHash batch against a PLAIN index built from the originals
+          val plainIndex = Multimodal.admissionIndex(Multimodal.dHash(spark,
+            blobs(Seq(0L, 1L, 2L, 6L))).toDF()).localCheckpoint()
+          val plain = Multimodal.admitNearDups(
+            Multimodal.dHash(spark, blobs(Seq(10L))).toDF(), plainIndex,
+            maxHamming = 0)._1.collect()
           plainKept10 = plain.head.getString(1) == "kept"
         }
-        val (verdicts, sigs) = Multimodal.imageFlipDedupIncrement(spark,
-          blobs(ids), state, maxHamming = 0)
+        val (verdicts, delta) = Multimodal.admitNearDups(
+          Multimodal.dHashFlipInvariant(spark, blobs(ids)).toDF(), index,
+          maxHamming = 0)
         out ++= verdicts.collect().map(r => (r.getLong(0), r.getString(1)))
-        state = state.unionByName(sigs).localCheckpoint()
+        index = index.unionByName(delta).localCheckpoint()
         ()
       }.start()
     def sb(id: Long) = {
@@ -1983,6 +1917,7 @@ class StreamingSpec extends SparkSpec {
     // the trimmed clip's windows ARE the source's shifted by one.
     import StreamOps.StreamBlob
     import graft.llm.Multimodal
+    import graft.llm.Multimodal.FrameMatch.Offset
     val baseTexts = Map(
       0L -> "audio base zero content here ~",  // n = 134 → 2 windows
       // NOTE: the clip-level envelope of a periodic text-derived signal
@@ -2005,17 +1940,19 @@ class StreamingSpec extends SparkSpec {
     val allBlobs = enc.unionByName(trims).localCheckpoint()
     def blobs(ids: Seq[Long]) =
       allBlobs.filter(col("doc_id").isin(ids: _*))
+    def windowSigs(b: DataFrame) = Multimodal.audioWindowHashes(spark, b)
+      .toDF().withColumnRenamed("win_idx", "frame_idx")
     val batch1 = Seq(0L, 1L, 2L, 6L)
     val batch2 = Seq(10L, 11L, 12L, 13L)
     val fusedDropped = Multimodal.audioOffsetNearDupsFromBlobs(spark,
         blobs(batch1 ++ batch2), maxHamming = 0, maxBandOcc = 100000,
         minWindows = 1, maxOffset = 1)
       .collect().map(_.getLong(1)).toSet
-    var state = Multimodal.audioWindowHashes(spark, allBlobs.limit(0))
-      .toDF().select(col("doc_id"), col("win_idx").as("frame_idx"),
-        col("dhash")).localCheckpoint()
+    var index = Multimodal.admissionIndex(windowSigs(allBlobs.limit(0)))
+      .localCheckpoint()
     var clipKept10 = false
     val out = scala.collection.mutable.ArrayBuffer[(Long, String)]()
+    val unprobed = scala.collection.mutable.Set[Long]()
     val in = MemoryStream[StreamBlob]
     val q = in.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -2024,16 +1961,24 @@ class StreamingSpec extends SparkSpec {
         if (ids.contains(10L)) {
           // the clip-level S41 probe (relative envelope) is BLIND to
           // the trim — witnessed before the window probe verdicts it
-          val clipState = Multimodal.audioHash(spark, blobs(batch1))
-            .toDF().select(col("doc_id"), col("dhash")).localCheckpoint()
-          val clip = Multimodal.audioDedupIncrement(spark,
-            blobs(Seq(10L)), clipState, maxHamming = 0)._1.collect()
+          val clipIndex = Multimodal.admissionIndex(
+            Multimodal.audioHash(spark, blobs(batch1)).toDF())
+            .localCheckpoint()
+          val clip = Multimodal.admitNearDups(
+            Multimodal.audioHash(spark, blobs(Seq(10L))).toDF(), clipIndex,
+            maxHamming = 0)._1.collect()
           clipKept10 = clip.head.getString(1) == "kept"
         }
-        val (verdicts, sigs) = Multimodal.audioOffsetDedupIncrement(spark,
-          blobs(ids), state, maxHamming = 0, minWindows = 1, maxOffset = 1)
-        out ++= verdicts.collect().map(r => (r.getLong(0), r.getString(1)))
-        state = state.unionByName(sigs).localCheckpoint()
+        val (verdicts, delta) = Multimodal.admitNearDups(
+          windowSigs(blobs(ids)), index, maxHamming = 0,
+          frames = Offset(minFrames = 1, maxOffset = 1))
+        // a clip shorter than one window has no fingerprint to probe
+        // with: the operator verdicts only fingerprinted ids, and the
+        // loop admits the rest
+        val got = verdictMap((verdicts, delta))
+        unprobed ++= ids.filterNot(got.contains)
+        out ++= ids.map(id => id -> got.getOrElse(id, "kept"))
+        index = index.unionByName(delta).localCheckpoint()
         ()
       }.start()
     def sb(id: Long) = {
@@ -2047,6 +1992,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     val verdicts = out.toMap
     assert(out.size === 8)
+    assert(unprobed.toSet === Set(13L))
     assert(verdicts.filter(_._2 != "kept").keySet === fusedDropped)
     assert(verdicts(6L) === "dup_batch")   // in-batch trim of 2
     assert(verdicts(12L) === "dup_batch")  // in-batch trim of 11
@@ -2054,58 +2000,63 @@ class StreamingSpec extends SparkSpec {
     assert(Seq(0L, 1L, 2L, 11L, 13L).forall(verdicts(_) == "kept"))
     assert(clipKept10,
       "the clip-level probe should keep the trim the window probe drops")
-    // the sub-window clip added no state rows
-    assert(state.filter(col("doc_id") === 13L).isEmpty)
+    // the sub-window clip added no index rows
+    assert(index.filter(col("doc_id") === 13L).isEmpty)
   }
 
-  test("indexed admission: probing the persisted band index is verdict-" +
-    "identical to the state form, appends compose per batch, and the " +
-    "compaction swap rebuilds the index from collapsed reps") {
-    // The carried-state INDEX form (the l52 bandIndex/extendIndex
-    // discipline on the perceptual plane): at scale the per-batch cost
-    // must be the BATCH's banding, never an O(state) band-explode —
-    // sigDedupIncrementIndexed probes the persisted index and returns
-    // the batch's own 8-rows/signature index delta.
+  /** Both key families on one plane: the banded admission index and its
+    * paired-group re-keying must each return the planted verdict map at
+    * maxHamming 3 with no exclusion (8 bands: pigeonhole < 8 errors;
+    * paired groups: ≤ 4), and, at the dormant default cap, compaction
+    * must find no hot bucket and leave every verdict unchanged. */
+  private def assertKeyFamiliesAgree(plane: String, state: DataFrame,
+      batch0: DataFrame, frames: graft.llm.Multimodal.FrameMatch,
+      expected: Map[Long, String]): Unit = {
     import graft.llm.Multimodal
-    val state = ((0 until 40).map(i => (100L + i, i.toLong * 0x9E3779B9L))
-      ++ Seq((500L, 0x0102030405060708L))).toDF("doc_id", "dhash")
-    val batch = Seq((1000L, 0x0102030405060708L), // exact dup of 500
-      (1001L, 0x0102030405060718L),               // Hamming 2 of 500
-      (1002L, 0x7777888899990000L),               // novel
-      (1003L, 0x7777888899990000L))               // in-batch dup of 1002
-      .toDF("doc_id", "dhash")
-    def vmap(p: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) =
-      p._1.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val fromState = vmap(Multimodal.sigDedupIncrement(batch, state, 2))
-    val index = Multimodal.sigBandIndex(state).localCheckpoint()
-    val (iVerd, delta) = Multimodal.sigDedupIncrementIndexed(batch, index, 2)
-    assert(vmap((iVerd, delta)) === fromState)
-    assert(fromState(1000L) === "dup_corpus"
-      && fromState(1001L) === "dup_corpus"
-      && fromState(1002L) === "kept" && fromState(1003L) === "dup_batch")
-    // the delta IS the batch's index rows: appending composes — a
-    // SECOND batch probing the extended index sees the first batch
-    val index2 = Multimodal.extendSigIndex(index, batch).localCheckpoint()
-    assert(index2.count() === index.count() + 4 * 8)
-    val batch2 = Seq((2000L, 0x7777888899990000L)).toDF("doc_id", "dhash")
-    assert(vmap(Multimodal.sigDedupIncrementIndexed(batch2, index2, 2))(2000L)
-      === "dup_corpus")
-    // compaction swap: rebuild from collapsed reps + hot exclusion —
-    // verdicts unchanged on the probe batch (exact-hash collapse is
-    // verdict-lossless, and this state has no hot buckets at cap 500)
-    val (reps, hot) = Multimodal.compactSigState(
-      state.unionByName(batch), maxBandOcc = 500)
-    val compacted = Multimodal.sigBandIndex(reps).localCheckpoint()
-    assert(vmap(Multimodal.sigDedupIncrementIndexed(batch2, compacted, 2,
-      Some(hot)))(2000L) === "dup_corpus")
+    val batch = batch0.localCheckpoint()
+    val banded = Multimodal.admissionIndex(state).localCheckpoint()
+    assert(banded.columns.contains("band_idx"), plane)
+    val grouped = Multimodal.sigGroupKeyed(banded
+        .filter(col("band_idx") === 0).drop("band_idx", "band_val"))
+      .localCheckpoint()
+    Seq(banded, grouped).foreach { index =>
+      assert(verdictMap(Multimodal.admitNearDups(batch, index,
+        maxHamming = 3, frames = frames)) === expected, plane)
+      val (reps, hot0) = Multimodal.compactAdmissionIndex(index, frames)
+      val hot = hot0.localCheckpoint()
+      assert(hot.count() === 0L, plane)
+      assert(verdictMap(Multimodal.admitNearDups(batch,
+        reps.localCheckpoint(), maxHamming = 3, frames = frames,
+        hotBuckets = Some(hot))) === expected, plane)
+    }
   }
 
-  test("grouped persisted index (round-18 directive #1b): verdict-" +
-    "identical to the banded index, Auto build/probe/extend dispatch on " +
-    "the carried format, and grouped compaction guards the group keys") {
-    import graft.llm.{KnobSchedule, Multimodal}
-    // Same fixture as the banded-index test, so the two key families
-    // are compared on identical probes.
+  /** The S42/S43 video fixture as (state, batch) frame-hash tables: the
+    * batch holds a head-trim of 2 (30), an exact re-post of 0 (31), a
+    * novel clip (32) and its in-batch re-post (33). */
+  private def videoPlane(): (DataFrame, DataFrame) = {
+    import graft.llm.Multimodal
+    def renamed(b: DataFrame, id: Long) =
+      b.select(lit(id).as("doc_id"), col("payload"))
+    val vEnc = Multimodal.encodeVideo(spark, Seq(
+        0L -> "first clip alpha content", 1L -> "second clip beta content",
+        2L -> "third clip gamma content").toDF("doc_id", "text"))
+      .toDF().localCheckpoint()
+    val vNovel = Multimodal.encodeVideo(spark,
+      Seq(32L -> "completely different zeta").toDF("doc_id", "text")).toDF()
+    val vBatch = Multimodal.videoFrameHashes(spark,
+      renamed(Multimodal.videoFrameSampleContainer(spark,
+          vEnc.filter(col("doc_id") === 2L), stride = 1, from = 1).toDF(),
+          30L)
+        .unionByName(renamed(vEnc.filter(col("doc_id") === 0L), 31L))
+        .unionByName(vNovel).unionByName(renamed(vNovel, 33L))).toDF()
+    (Multimodal.videoFrameHashes(spark, vEnc).toDF(), vBatch)
+  }
+
+  /** The persisted-index fixture: 41 seen signatures, a probe batch with
+    * an exact dup, a Hamming-2 dup, a novel hash and its in-batch dup,
+    * and a one-row second batch re-posting the novel hash. */
+  private def indexFixture(): (DataFrame, DataFrame, DataFrame) = {
     val state = ((0 until 40).map(i => (100L + i, i.toLong * 0x9E3779B9L))
       ++ Seq((500L, 0x0102030405060708L))).toDF("doc_id", "dhash")
     val batch = Seq((1000L, 0x0102030405060708L), // exact dup of 500
@@ -2113,106 +2064,225 @@ class StreamingSpec extends SparkSpec {
       (1002L, 0x7777888899990000L),               // novel
       (1003L, 0x7777888899990000L))               // in-batch dup of 1002
       .toDF("doc_id", "dhash")
-    def vmap(p: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) =
-      p._1.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val fromBanded = vmap(Multimodal.sigDedupIncrementIndexed(batch,
-      Multimodal.sigBandIndex(state).localCheckpoint(), 2))
-    val gindex = Multimodal.sigGroupIndex(state).localCheckpoint()
-    assert(gindex.count() === 41L * 15) // 15 key rows per signature
-    val (gVerd, gDelta) = Multimodal.sigDedupIncrementIndexedGrouped(
-      batch, gindex, 2)
-    assert(vmap((gVerd, gDelta)) === fromBanded)
-    // appends compose: the delta is the batch's 15-rows/sig key table
-    val gindex2 = Multimodal.extendSigGroupIndex(gindex, batch)
-      .localCheckpoint()
-    assert(gindex2.count() === gindex.count() + 4 * 15)
     val batch2 = Seq((2000L, 0x7777888899990000L)).toDF("doc_id", "dhash")
-    assert(vmap(Multimodal.sigDedupIncrementIndexedGrouped(batch2,
-      gindex2, 2))(2000L) === "dup_corpus")
-    // grouped compaction: exact-hash collapse + hot (table_id, tkey)
-    // exclusion over the collapsed occupancy — verdicts unchanged at a
-    // dormant cap, and a planted degenerate pile trips the guard on
-    // the group keys (all 15 tables of an identical-hash pile share
-    // one key each — but the COLLAPSE absorbs it first, so the guard
-    // only sees content pile-ups: distinct hashes sharing group keys)
-    val (greps, ghot) = Multimodal.compactSigStateGrouped(
-      state.unionByName(batch), maxTableOcc = 500)
-    assert(ghot.count() === 0L)
-    assert(vmap(Multimodal.sigDedupIncrementIndexedGrouped(batch2,
-      Multimodal.sigGroupIndex(greps).localCheckpoint(), 2,
-      Some(ghot)))(2000L) === "dup_corpus")
-    // 120 DISTINCT hashes varying only in bits 54-63: every pair of
-    // the five groups below bit 54 agrees, so the 10 tables not
-    // touching group 5 pile 120 rows into one key each and go hot at
-    // cap 100; the 5 tables pairing with group 5 stay cold
-    val pile = (0 until 120).map(i => (3000L + i, i.toLong << 56))
-      .toDF("doc_id", "dhash")
-    val (_, pileHot) = Multimodal.compactSigStateGrouped(pile,
-      maxTableOcc = 100)
-    assert(pileHot.count() === 10L)
-    // the Auto surface: build format follows the end-of-ladder switch
-    // (banded below the threshold), probe/extend dispatch on whatever
-    // format the carried index actually has
-    val autoIdx = Multimodal.sigIndexAuto(state, 2)
-    assert(autoIdx.columns.contains("band_idx")) // 41 sigs: banded era
-    assert(vmap(Multimodal.sigDedupIncrementIndexedAuto(batch,
-      autoIdx.localCheckpoint(), 2)) === fromBanded)
-    assert(vmap(Multimodal.sigDedupIncrementIndexedAuto(batch,
-      gindex, 2)) === fromBanded)
-    assert(Multimodal.extendSigIndexAuto(gindex, batch).count()
-      === gindex.count() + 4 * 15)
-    assert(Multimodal.extendSigIndexAuto(
-      Multimodal.sigBandIndex(state), batch).count() === 41L * 8 + 4 * 8)
-    // past the ladder's end the same call would build grouped keys —
+    (state, batch, batch2)
+  }
+
+  test("key families: banded and grouped indexes give identical verdicts " +
+    "through the one admission core on every frame-aligned plane, and " +
+    "compaction is verdict-lossless in both") {
+    // One table, four planes: each pairs a seen-state signature table
+    // with a probe batch that plants a cross-batch duplicate, an
+    // in-batch duplicate and a novel clip (the offset planes are pinned
+    // in the grouped offset admission test).
+    import graft.llm.Multimodal
+    import graft.llm.Multimodal.FrameMatch
+    import graft.llm.Multimodal.FrameMatch.Aligned
+    def blobsOf(rows: Seq[Multimodal.BlobRow]) = rows.toDF()
+    def renamed(b: DataFrame, id: Long) =
+      b.select(lit(id).as("doc_id"), col("payload"))
+    // image: brightness-shifted near-dups (the S39 fixture)
+    val image = (
+      Multimodal.dHash(spark, blobsOf(Seq(ppmBlob(0, 0), ppmBlob(1, 1),
+        ppmBlob(2, 2)))).toDF(),
+      Multimodal.dHash(spark, blobsOf(Seq(ppmBlob(10, 1, shift = 15),
+        ppmBlob(11, 7), ppmBlob(14, 7, shift = 10)))).toDF())
+    // flipped image: mirrors of a seen and of an in-batch image (S44)
+    val pEnc = Multimodal.encodePpm(spark, Seq(
+        0L -> "first image alpha content here",
+        1L -> "second image beta content here",
+        11L -> "fourth image delta content here").toDF("doc_id", "text"))
+      .toDF().localCheckpoint()
+    val pFlip = Multimodal.flipHorizontal(spark, pEnc).toDF()
+    val flipped = (
+      Multimodal.dHashFlipInvariant(spark,
+        pEnc.filter(col("doc_id") < 11L)).toDF(),
+      Multimodal.dHashFlipInvariant(spark,
+        renamed(pFlip.filter(col("doc_id") === 1L), 10L)
+          .unionByName(pEnc.filter(col("doc_id") === 11L))
+          .unionByName(renamed(pFlip.filter(col("doc_id") === 11L), 12L)))
+        .toDF())
+    // audio clip: gain-scaled re-uploads (S41)
+    val audioClip = (
+      Multimodal.audioHash(spark, blobsOf((0 to 2).map(i =>
+        wavBlob(i.toLong, wavSamples(i))))).toDF(),
+      Multimodal.audioHash(spark, blobsOf(Seq(
+        wavBlob(10, wavSamples(1).map(_ * 2)), wavBlob(11, wavSamples(7)),
+        wavBlob(14, wavSamples(7).map(_ * 8))))).toDF())
+    val (c, b, k) = ("dup_corpus", "dup_batch", "kept")
+    val planes = Seq[(String, (DataFrame, DataFrame), FrameMatch,
+        Map[Long, String])](
+      ("image", image, Aligned(), Map(10L -> c, 11L -> k, 14L -> b)),
+      ("flipped image", flipped, Aligned(), Map(10L -> c, 11L -> k, 12L -> b)),
+      ("audio clip", audioClip, Aligned(), Map(10L -> c, 11L -> k, 14L -> b)),
+      // the aligned probe keeps the head-trim (30): S42's blindness
+      ("aligned video", videoPlane(), Aligned(minFrames = 2),
+        Map(30L -> k, 31L -> c, 32L -> k, 33L -> b)))
+    planes.foreach { case (plane, (state, batch), frames, expected) =>
+      assertKeyFamiliesAgree(plane, state, batch, frames, expected)
+    }
+  }
+
+  test("grouped offset admission (round 19): the paired-group frame-blind " +
+    "probe is verdict-identical to the banded S43/S45 probe on both " +
+    "planes, and grouped offset compaction is verdict-lossless") {
+    import graft.llm.Multimodal
+    import graft.llm.Multimodal.FrameMatch.Offset
+    def renamed(b: DataFrame, id: Long) =
+      b.select(lit(id).as("doc_id"), col("payload"))
+    // video (S43): the offset probe drops the head-trim the aligned
+    // probe keeps
+    val (vState, vBatch) = videoPlane()
+    assertKeyFamiliesAgree("offset video", vState, vBatch,
+      Offset(minFrames = 2, maxOffset = 1),
+      Map(30L -> "dup_corpus", 31L -> "dup_corpus", 32L -> "kept",
+        33L -> "dup_batch"))
+    // windowed audio (S45): one-window head-trims of a seen and of an
+    // in-batch clip
+    val aEnc = Multimodal.encodeWav(spark, Seq(
+        0L -> "audio base zero content here ~",
+        2L -> "clip two audio content words ~",
+        11L -> "a different eleventh clip tx ~").toDF("doc_id", "text"))
+      .toDF().localCheckpoint()
+    val aTrim = Multimodal.audioTrimHeadContainer(spark, aEnc,
+      nSamples = 65).toDF()
+    def windows(b: DataFrame) = Multimodal.audioWindowHashes(spark, b).toDF()
+      .withColumnRenamed("win_idx", "frame_idx")
+    assertKeyFamiliesAgree("windowed audio",
+      windows(aEnc.filter(col("doc_id") < 11L)),
+      windows(renamed(aTrim.filter(col("doc_id") === 2L), 6L)
+        .unionByName(aEnc.filter(col("doc_id") === 11L))
+        .unionByName(renamed(aTrim.filter(col("doc_id") === 11L), 12L))),
+      Offset(minFrames = 1, maxOffset = 1),
+      Map(6L -> "dup_corpus", 11L -> "kept", 12L -> "dup_batch"))
+    // beyond the pigeonhole guarantee the grouped family refuses loudly
+    intercept[IllegalArgumentException](Multimodal.admitNearDups(vBatch,
+      Multimodal.sigGroupKeyed(vState), maxHamming = 5,
+      frames = Offset(minFrames = 2, maxOffset = 1)))
+  }
+
+  test("admission index: both key families verdict the planted probes, " +
+    "appends compose per batch, compaction rebuilds the index from " +
+    "collapsed reps in its own family, and the build follows the " +
+    "end-of-ladder switch") {
+    // The carried-index discipline (l52 bandIndex/extendIndex on the
+    // perceptual plane): at scale the per-batch cost must be the
+    // BATCH's keying, never an O(state) re-key — admitNearDups probes
+    // the persisted index and returns the batch's own index delta.
+    import graft.llm.{KnobSchedule, Multimodal}
+    val (state, batch, batch2) = indexFixture()
+    val banded = Multimodal.admissionIndex(state, maxHamming = 2)
+      .localCheckpoint()
+    assert(banded.columns.contains("band_idx")) // 41 sigs: banded era
+    val grouped = Multimodal.sigGroupKeyed(state).localCheckpoint()
+    Seq((banded, 8), (grouped, 15)).foreach { case (index, keysPerSig) =>
+      assert(index.count() === 41L * keysPerSig)
+      val (verdicts, delta) = Multimodal.admitNearDups(batch, index, 2)
+      assert(verdictMap((verdicts, delta)) === Map(1000L -> "dup_corpus",
+        1001L -> "dup_corpus", 1002L -> "kept", 1003L -> "dup_batch"))
+      // the delta IS the batch's index rows in the index's family:
+      // appending composes — a SECOND batch probing the extended index
+      // sees the first batch
+      val index2 = index.unionByName(delta).localCheckpoint()
+      assert(index2.count() === index.count() + 4 * keysPerSig)
+      assert(verdictMap(Multimodal.admitNearDups(batch2, index2, 2))(2000L)
+        === "dup_corpus")
+      // compaction swap: rebuild from collapsed reps (1000 and 1003
+      // collapse into 500 and 1002) + hot exclusion, in the same
+      // family — verdicts unchanged at a dormant cap
+      val (reps, hot) = Multimodal.compactAdmissionIndex(index2,
+        maxBucketOcc = 500)
+      assert(reps.columns.toSet === index.columns.toSet)
+      assert(reps.count() === 43L * keysPerSig)
+      assert(hot.count() === 0L)
+      assert(verdictMap(Multimodal.admitNearDups(batch2,
+        reps.localCheckpoint(), 2, hotBuckets = Some(hot)))(2000L)
+        === "dup_corpus")
+    }
+    // past the ladder's end the same build would key paired groups —
     // pinned at the schedule level (the l146 switch test); the probe
     // path for that era is exactly the grouped probe proven above
     assert(KnobSchedule.dhashUseGroupedKeys(64L * 65536 + 65536, 2))
   }
 
-  test("compactSigState: exact-hash collapse is verdict-lossless for " +
-    "admission; the hot-band index silences a degenerate pile — and the " +
-    "excluded-band recall trade is exactly the documented one") {
+  test("grouped persisted index (round-18 directive #1b): verdict-" +
+    "identical to the banded index, Auto build/probe/extend dispatch on " +
+    "the carried format, and grouped compaction guards the group keys") {
+    import graft.llm.Multimodal
+    // Same fixture as the admission-index test, so the two key families
+    // are compared on identical probes.
+    val (state, batch, _) = indexFixture()
+    val banded = Multimodal.admissionIndex(state, maxHamming = 2)
+      .localCheckpoint()
+    val grouped = Multimodal.sigGroupKeyed(state).localCheckpoint()
+    val (bVerd, bDelta) = Multimodal.admitNearDups(batch, banded, 2)
+    val (gVerd, gDelta) = Multimodal.admitNearDups(batch, grouped, 2)
+    assert(verdictMap((gVerd, gDelta)) === verdictMap((bVerd, bDelta)))
+    // the one admission core reads the family from the carried index:
+    // the batch delta and the hot-bucket table come back keyed in it
+    assert(bDelta.columns.toSet === banded.columns.toSet)
+    assert(gDelta.columns.toSet === grouped.columns.toSet)
+    assert(Multimodal.compactAdmissionIndex(banded)._2.columns.toSeq
+      === Seq("band_idx", "band_val"))
+    assert(Multimodal.compactAdmissionIndex(grouped)._2.columns.toSeq
+      === Seq("table_id", "tkey"))
+    // grouped compaction guards the GROUP keys: 120 DISTINCT hashes
+    // varying only in bits 56-63 — every pair of the five groups below
+    // bit 54 agrees, so the 10 tables not touching group 5 pile 120
+    // rows into one key each and go hot at cap 100; the 5 tables
+    // pairing with group 5 stay cold
+    val pile = (0 until 120).map(i => (3000L + i, i.toLong << 56))
+      .toDF("doc_id", "dhash")
+    val (_, pileHot) = Multimodal.compactAdmissionIndex(
+      Multimodal.sigGroupKeyed(pile), maxBucketOcc = 100)
+    assert(pileHot.count() === 10L)
+  }
+
+  test("compactAdmissionIndex: exact-hash collapse is verdict-lossless " +
+    "for admission; the hot-band index silences a degenerate pile — and " +
+    "the excluded-band recall trade is exactly the documented one") {
     import graft.llm.Multimodal
     // (a) pile losslessness: 50 copies of one signature collapse to a
     // single rep; an arriving exact copy still verdicts dup_corpus.
     val pile = ((0 until 50).map(i => (2000L + i, 0x0102030405060708L)) ++
       Seq((3000L, 0x1111222233334444L))).toDF("doc_id", "dhash")
-    val (pileRep, pileHot) = Multimodal.compactSigState(pile, maxBandOcc = 500)
-    assert(pileRep.count() === 2L) // one rep per distinct value
+    val pileIndex = Multimodal.admissionIndex(pile).localCheckpoint()
+    val (pileRep, pileHot) = Multimodal.compactAdmissionIndex(pileIndex,
+      maxBucketOcc = 500)
+    assert(pileRep.count() === 2L * 8) // one rep per distinct value
     assert(pileHot.count() === 0L) // collapsed occupancy is tiny
     val probe = Seq((1L, 0x0102030405060708L)).toDF("doc_id", "dhash")
-    def verdictOf(state: org.apache.spark.sql.DataFrame,
-                  hot: Option[org.apache.spark.sql.DataFrame]) =
-      Multimodal.sigDedupIncrement(probe, state, maxHamming = 2, hot)
-        ._1.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(verdictOf(pile, None) === verdictOf(pileRep, Some(pileHot)))
+    def verdictOf(index: DataFrame, hot: Option[DataFrame]) =
+      verdictMap(Multimodal.admitNearDups(probe, index, maxHamming = 2,
+        hotBuckets = hot))
+    assert(verdictOf(pileIndex, None) === verdictOf(pileRep, Some(pileHot)))
     assert(verdictOf(pileRep, Some(pileHot))(1L) === "dup_corpus")
     // (b) hot-band exclusion: 120 DISTINCT signatures differing only in
     // the top byte share band-value 0 on bands 0–6 — at cap 100 those
     // seven buckets go hot while band 7 stays cold (distinct values).
     val state = (0 until 120).map(i => (1000L + i, i.toLong << 56))
       .toDF("doc_id", "dhash")
-    val (repState, hot) = Multimodal.compactSigState(state, maxBandOcc = 100)
-    assert(repState.count() === 120L)
+    val (repIndex0, hot) = Multimodal.compactAdmissionIndex(
+      Multimodal.admissionIndex(state), maxBucketOcc = 100)
+    val repIndex = repIndex0.localCheckpoint()
+    assert(repIndex.count() === 120L * 8)
     assert(hot.collect().map(r => (r.getInt(0), r.getLong(1))).toSet ===
       (0 until 7).map(b => (b, 0L)).toSet)
+    def verdict(sig: (Long, Long), hotBuckets: Option[DataFrame]) =
+      Multimodal.admitNearDups(Seq(sig).toDF("doc_id", "dhash"), repIndex,
+        2, hotBuckets = hotBuckets)._1.collect().head.getString(1)
     // an exact copy of a state member still admits as dup via the COLD
     // band 7 (exact duplicates share every band with their rep — at
     // least one cold band survives unless the whole signature is hot)
-    val exact = Seq((1L, 42L << 56)).toDF("doc_id", "dhash")
-    assert(Multimodal.sigDedupIncrement(exact, repState, 2, Some(hot))
-      ._1.collect().head.getString(1) === "dup_corpus")
+    assert(verdict((1L, 42L << 56), Some(hot)) === "dup_corpus")
     // a NEAR-dup whose one differing bit sits in band 7 (so its cold
     // band no longer matches) is reachable only through the hot bands —
     // excluded ⇒ kept: the documented recall trade, priced here
-    val nearViaHot = Seq((2L, (42L << 56) ^ (1L << 63)))
-      .toDF("doc_id", "dhash")
-    assert(Multimodal.sigDedupIncrement(nearViaHot, repState, 2, Some(hot))
-      ._1.collect().head.getString(1) === "kept")
+    val nearViaHot = (2L, (42L << 56) ^ (1L << 63))
+    assert(verdict(nearViaHot, Some(hot)) === "kept")
     // ...and found when the guard is off, proving exclusion (not a
     // missing pair) is what dropped it
-    assert(Multimodal.sigDedupIncrement(nearViaHot, repState, 2, None)
-      ._1.collect().head.getString(1) === "dup_corpus")
+    assert(verdict(nearViaHot, None) === "dup_corpus")
   }
 
   test("compactionDue: the S39–S45 cadence predicate fires when the " +
@@ -2237,7 +2307,7 @@ class StreamingSpec extends SparkSpec {
     // loop A never compacts, loop B compacts exactly when the predicate
     // fires (floor lowered to fixture scale) — verdicts must agree
     // batch-for-batch, the predicate must fire, and a fresh compaction
-    // must reset it
+    // must reset it. Rows are counted in signatures (8 index rows each).
     val H = 0x0102030405060708L
     def sigs(rows: Seq[(Long, Long)]) = rows.toDF("doc_id", "dhash")
     val batches = Seq(
@@ -2245,39 +2315,39 @@ class StreamingSpec extends SparkSpec {
       sigs((11L to 40L).map(i => i -> H)),
       sigs((41L to 70L).map(i => i -> H) :+ (71L -> 5000017L)),
       sigs(Seq(80L -> H, 81L -> 9000029L, 82L -> 10L * 1000003L)))
-    var stateA = sigs(Seq.empty).localCheckpoint()
-    var stateB = sigs(Seq.empty).localCheckpoint()
-    var hotB: Option[org.apache.spark.sql.DataFrame] = None
+    var indexA = Multimodal.admissionIndex(sigs(Seq.empty)).localCheckpoint()
+    var indexB = indexA
+    var hotB: Option[DataFrame] = None
     var rawRows = 0L
     var repRows = 0L
     var fired = 0
-    def vmap(v: org.apache.spark.sql.DataFrame) =
-      v.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     batches.foreach { b =>
-      val (va, sa) = Multimodal.sigDedupIncrement(b, stateA, 2, None)
-      val (vb, sb) = Multimodal.sigDedupIncrement(b, stateB, 2, hotB)
-      assert(vmap(va) === vmap(vb),
+      val (va, da) = Multimodal.admitNearDups(b, indexA, 2)
+      val (vb, db) = Multimodal.admitNearDups(b, indexB, 2,
+        hotBuckets = hotB)
+      assert(verdictMap((va, da)) === verdictMap((vb, db)),
         "cadence-compacted loop diverged from the raw loop")
-      stateA = stateA.unionByName(sa).localCheckpoint()
-      stateB = stateB.unionByName(sb).localCheckpoint()
+      indexA = indexA.unionByName(da).localCheckpoint()
+      indexB = indexB.unionByName(db).localCheckpoint()
       rawRows += b.count()
       if (KnobSchedule.compactionDue(rawRows, repRows, minRows = 16L)) {
         fired += 1
-        val (reps, hot) = Multimodal.compactSigState(stateB, 500)
-        stateB = reps.localCheckpoint()
+        val (reps, hot) = Multimodal.compactAdmissionIndex(indexB,
+          maxBucketOcc = 500)
+        indexB = reps.localCheckpoint()
         hotB = Some(hot.localCheckpoint())
-        repRows = stateB.count()
+        repRows = indexB.count() / 8
         rawRows = repRows
         // a fresh compaction resets the trigger until the state doubles
         assert(!KnobSchedule.compactionDue(rawRows, repRows, minRows = 16L))
       }
     }
     assert(fired >= 1, "the viral pile never tripped the cadence predicate")
-    // the pile collapsed: the compacted state is far below the raw one
-    assert(stateB.count() < stateA.count())
+    // the pile collapsed: the compacted index is far below the raw one
+    assert(indexB.count() < indexA.count())
     // and a late exact copy of the pile still verdicts dup off the rep
-    assert(vmap(Multimodal.sigDedupIncrement(
-      sigs(Seq(99L -> H)), stateB, 2, hotB)._1)(99L) === "dup_corpus")
+    assert(verdictMap(Multimodal.admitNearDups(sigs(Seq(99L -> H)), indexB,
+      2, hotBuckets = hotB))(99L) === "dup_corpus")
   }
 
   test("S38: IVF-PQ ANN serving under foreachBatch — arriving query " +
