@@ -12,7 +12,11 @@ package graft
   *    absorbs per-query one-time costs that are irrelevant at 100 TB —
   *    whole-stage-codegen Janino compilation and JIT of the generated class
   *    (round-2 data: d20 first run 3.4 s, steady state 0.4 s on a 15k-row
-  *    input — the first run measured the *compiler*, not the query). The
+  *    input — the first run measured the *compiler*, not the query) — but
+  *    only while the query's generated bodies fit Spark's compiled-class
+  *    cache: a query whose bodies outnumber the cache evicts its own
+  *    classes and recompiles them in the timed runs (GraftSession sizes the
+  *    cache; per-query `codegen` counts the timed runs' compiles). The
   *    reported number is the steady-state execution the plan would sustain
   *    per task on a cluster.
   *  - Before every run, residue from prior queries is dropped: cached plans
@@ -78,6 +82,20 @@ object Bench {
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime max 0L).sum
   }
+
+  /** Cumulative count of generated-code bodies compiled in this JVM (every
+    * miss of Spark's compiled-class cache). A query's timed runs should
+    * compile nothing once its warm run has; a non-zero per-query delta
+    * means the cache evicted the query's own classes between runs. */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** One query's timed record: min/max of the two timed runs, code-cache
+    * occupancy after them, JIT/GC time over warm+timed runs, codegen
+    * compiles over the timed runs, and its offset in the sequence. */
+  private final case class QueryRun(name: String, min: Double, max: Double,
+                                    ccMb: Double, jitMs: Long, gcMs: Long,
+                                    codegen: Long, tOff: Double)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -148,8 +166,10 @@ object Bench {
       val j0 = jitMs
       val g0 = gcMs
       runOnce(n)
+      val c0 = codegenCompiles
       val (a, b) = (runOnce(n), runOnce(n))
-      (n, math.min(a, b), math.max(a, b), codeCacheUsedMb, jitMs - j0, gcMs - g0, off)
+      QueryRun(n, math.min(a, b), math.max(a, b), codeCacheUsedMb,
+        jitMs - j0, gcMs - g0, codegenCompiles - c0, off)
     }
 
     // End-of-sequence sentinel: d01 re-timed AFTER the whole sequence. Read
@@ -212,13 +232,13 @@ object Bench {
     // probes say so. If the spawn fails (classpath oddity under a future
     // launcher), the bracket falls back to the old same-JVM retry and the
     // artifact says so ("bracket":"same_jvm").
-    val flaggedAll = results.flatMap { case (k, mn, _, _, _, _, _) =>
-      val short = k.split('_')(0)
+    val flaggedAll = results.flatMap { r =>
+      val short = r.name.split('_')(0)
       for {
         b <- baselineRows.get(short) if b > 0
         hn <- hostNorm
-        norm = mn / b * hn if norm >= 1.5
-      } yield (k, short, b, norm)
+        norm = r.min / b * hn if norm >= 1.5
+      } yield (r.name, short, b, norm)
     }.sortBy(-_._4)
     // cap the RETRIES worst-first (a run with more than 12 flags is a
     // degraded host by construction) — but the printed n_ge1.5 count is
@@ -323,21 +343,25 @@ object Bench {
       case (retry, pS, pE, rn, v, br, bt) =>
         s""","retry_sec":${r3(retry)},"retry_d01_start":${r3(pS)},"retry_d01_end":${r3(pE)},"retry_norm":${r3(rn)},"verdict":"$v","bracket":"$br","base_used":"$bt""""
     }
-    val detail = (results.map { case (k, mn, mx, ccMb, jMs, gMs, off) =>
-      s""""$k":{"min":${r3(mn)},"max":${r3(mx)},"t_off":${r3(off)},"cc_mb":${r3(ccMb)},"jit_ms":$jMs,"gc_ms":$gMs${ratios(k.split('_')(0), mn)}${arbJson(k)}}""" } ++
+    val detail = (results.map { r =>
+      s""""${r.name}":{"min":${r3(r.min)},"max":${r3(r.max)},"t_off":${r3(r.tOff)},"cc_mb":${r3(r.ccMb)},"jit_ms":${r.jitMs},"gc_ms":${r.gcMs},"codegen":${r.codegen}${ratios(r.name.split('_')(0), r.min)}${arbJson(r.name)}}""" } ++
       midProbes.map { case (k, v, off) =>
         s""""$k":{"min":${r3(v)},"max":${r3(v)},"t_off":${r3(off)}}""" } :+
       s""""d01_end":{"min":${r3(sentinel)},"max":${r3(sentinel)},"cc_mb":${r3(codeCacheUsedMb)},"jit_ms":$sentJitMs,"gc_ms":$sentGcMs}""").mkString("{", ",", "}")
-    val totalMin = results.map(_._2).sum
-    val totalMax = results.map(_._3).sum
+    val totalMin = results.map(_.min).sum
+    val totalMax = results.map(_.max).sum
     // Run-level compilation-state summary: cc_reserve_mb is what the JVM
     // actually reserved (the -XX flag as seen from inside), cc_peak_mb the
     // high-water occupancy across queries. peak/reserve ≥ ~0.9 ⇒ the
     // sweeper was active and deopt readings are expected; ≪ 1 ⇒ a slow
     // reading is NOT code-cache overflow, look elsewhere.
-    val ccPeakMb = (results.map(_._4) :+ ccStartMb).max
+    // codegen_total: bodies compiled over the whole run (the warm-up and
+    // every query's three runs); codegen_cache_max: the compiled-class
+    // cache bound in force — a total near or above the bound with
+    // non-zero per-query `codegen` means the cache thrashes.
+    val ccPeakMb = (results.map(_.ccMb) :+ ccStartMb).max
     val jvmMeta =
-      s""","jvm":{"cc_reserve_mb":${r3(codeCacheMaxMb)},"cc_start_mb":${r3(ccStartMb)},"cc_peak_mb":${r3(ccPeakMb)},"cc_end_mb":${r3(codeCacheUsedMb)},"jit_total_ms":${jitMs - jitStartMs},"gc_total_ms":${gcMs},"seed":${seed.fold("null")(_.toString)},"retry_child_exit":${retryChildExit.fold("null")(_.toString)}}"""
+      s""","jvm":{"cc_reserve_mb":${r3(codeCacheMaxMb)},"cc_start_mb":${r3(ccStartMb)},"cc_peak_mb":${r3(ccPeakMb)},"cc_end_mb":${r3(codeCacheUsedMb)},"jit_total_ms":${jitMs - jitStartMs},"gc_total_ms":${gcMs},"codegen_total":$codegenCompiles,"codegen_cache_max":${spark.conf.get("spark.sql.codegen.cache.maxEntries")},"seed":${seed.fold("null")(_.toString)},"retry_child_exit":${retryChildExit.fold("null")(_.toString)}}"""
     // SPARK_GRAFT_ONLY runs write a SEPARATE detail file: BENCH_DETAIL.json
     // is the full-sequence per-query record BASELINE.md points readers at
     // for regression arbitration — a 3-query dev iteration must never
@@ -349,17 +373,17 @@ object Bench {
       s"""{"metric":"total","min":${r3(totalMin)},"max":${r3(totalMax)},"unit":"sec","sf":"$sfDir"$jvmMeta,"queries":$detail}"""
         .getBytes("UTF-8"))
 
-    val qs = results.map { case (k, mn, _, _, _, _, _) =>
-      "\"" + k.split('_')(0) + "\":" + r3(mn) }.mkString("{", ",", "}")
+    val qs = results.map { r =>
+      "\"" + r.name.split('_')(0) + "\":" + r3(r.min) }.mkString("{", ",", "}")
     // Compact normalized-gate summary on the printed line itself (the
     // full per-query ratios live in the detail file — the driver keeps
     // only the last 2000 chars of output, so this must stay small):
     // worst 5 normalized ratios + the count at or above 1.5x.
     val gate = if (baselineRows.isEmpty) "" else {
-      val normed = results.flatMap { case (k, mn, _, _, _, _, _) =>
-        val short = k.split('_')(0)
+      val normed = results.flatMap { r =>
+        val short = r.name.split('_')(0)
         baselineRows.get(short).filter(_ > 0).map { b =>
-          short -> hostNorm.fold(mn / b)(mn / b * _) }
+          short -> hostNorm.fold(r.min / b)(r.min / b * _) }
       }
       val worst = normed.sortBy(-_._2).take(5)
         .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
@@ -398,8 +422,8 @@ object Bench {
     // If a future query-count growth overruns the budget, the reg map then
     // the counts are dropped before the queries map is ever truncated.
     def r1(v: Double): String = "%.1f".formatLocal(java.util.Locale.US, v)
-    val qs1 = results.map { case (k, mn, _, _, _, _, _) =>
-      "\"" + k.split('_')(0) + "\":" + r1(mn) }.mkString("{", ",", "}")
+    val qs1 = results.map { r =>
+      "\"" + r.name.split('_')(0) + "\":" + r1(r.min) }.mkString("{", ",", "}")
     val regShort = arb.toSeq.filter(_._2._5 == "regression")
       .sortBy(-_._2._4).take(3)
       .map { case (k, (_, _, _, rn, _, _, _)) =>

@@ -1844,26 +1844,6 @@ object Multimodal {
       "max_table_occ", "n_hot_tables")
   }
 
-  /** The BANDED-era twin of `frameOffsetGroupedOccSweep` at an explicit
-    * band width — the measured table `frameGuardCapCalibrated` reads
-    * while the band ladder still holds. */
-  private[graft] def frameOffsetBandedOccSweep(sig: DataFrame,
-                                               maxHamming: Int,
-                                               minFrames: Int,
-                                               maxOffset: Int,
-                                               caps: Seq[Int],
-                                               bandBits: Int): DataFrame = {
-    require(maxHamming < 64 / bandBits,
-      s"banding at $bandBits bits is lossy beyond Hamming " +
-        s"${64 / bandBits - 1} (requested $maxHamming)")
-    frameOffsetOccSweepKeyed(
-      videoBandedSigs(sig, bandBits)
-        .withColumnRenamed("band_idx", "bkt_id")
-        .withColumnRenamed("band_val", "bkt_key"),
-      maxHamming, minFrames, maxOffset, caps,
-      "max_band_occ", "n_hot_buckets")
-  }
-
   /** L151 — frame-ALIGNED grouped occupancy sweep: the l149/l150
     * knob-pricing discipline on the l133/l134 candidate family —
     * per-cap hot (frame_idx, table_id, tkey) buckets over the aligned

@@ -631,12 +631,15 @@ object Similarity {
         .filter(col("occ") > lit(hotFactor) * targetOcc).isEmpty
       if (anyHot) {
         // dense relabel: composite ids from the previous level collapse
-        // back to small ranks before the next level multiplies by STRIDE
-        val wRank = Window.orderBy(col("cell"))
-        val ranked = cs.select(col("cell")).distinct()
-          .withColumn("cr", row_number().over(wRank).cast(LongType))
-        val rel = cs.join(broadcast(ranked), Seq("cell"))
-          .select(col("nid"), col("ce"), col("cr").as("cell"),
+        // back to small ranks before the next level multiplies by STRIDE.
+        // The rank is the 1-based position in ONE sorted row of the
+        // distinct cells, broadcast — a global-order window would pull
+        // every cell into a single partition.
+        val sorted = cs.select(col("cell")).distinct()
+          .agg(sort_array(collect_list(col("cell"))).as("cells"))
+        val rel = cs.crossJoin(broadcast(sorted))
+          .select(col("nid"), col("ce"),
+            array_position(col("cells"), col("cell")).as("cell"),
             col("cent_sim"))
         cs = refineHotCells(rel, n, nCells, hotFactor, iters)
           .localCheckpoint()

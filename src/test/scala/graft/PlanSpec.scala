@@ -207,47 +207,41 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  /** Output attribute names of every shuffle exchange's CHILD — the rows
-    * that actually cross the wire. `treeString` prints only partitioning
-    * KEYS on Exchange lines (payload columns never appear), so a
-    * text-grep over the plan string can assert key discipline but is
-    * structurally unable to catch a text column riding a shuffle as
-    * PAYLOAD. This walks the executed tree instead — descending into AQE
-    * query stages, which are leaves to a plain collect — and returns the
-    * real payload schema of each shuffle. */
-  /** One executed tree's shuffle payloads as ATTRIBUTES (name + type) —
-    * shared by the name-ban and ArrayType-ban checks. */
-  private def walkShuffles(root: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[Seq[org.apache.spark.sql.catalyst.expressions.Attribute]] = {
-    import org.apache.spark.sql.execution.SparkPlan
+  /** Every node of one executed tree, descending into AQE query stages
+    * (leaves to a plain collect). */
+  private def planNodes(root: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def walk(p: SparkPlan)
-        : Seq[Seq[org.apache.spark.sql.catalyst.expressions.Attribute]] = {
-      val here = p match {
-        case s: ShuffleExchangeLike => Seq(s.child.output.toSeq)
-        case _ => Nil
-      }
-      val next: Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      here ++ next.flatMap(walk)
+    val next = root match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
     }
-    walk(root)
+    root +: next.flatMap(planNodes)
   }
 
-  /** Shuffle payloads across EVERY QueryExecution the operator runs —
-    * not just the final one. Iterative operators (CC loops) and
+  /** Output attributes (name + type) of every shuffle exchange's CHILD —
+    * the rows that actually cross the wire. `treeString` prints only
+    * partitioning KEYS on Exchange lines (payload columns never appear),
+    * so a text-grep over the plan string can assert key discipline but is
+    * structurally unable to catch a text column riding a shuffle as
+    * PAYLOAD. Shared by the name-ban and ArrayType-ban checks. */
+  private def walkShuffles(root: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[Seq[org.apache.spark.sql.catalyst.expressions.Attribute]] = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    planNodes(root).collect { case s: ShuffleExchangeLike => s.child.output.toSeq }
+  }
+
+  /** EVERY physical plan an operator executes — not just the final one.
+    * Iterative operators (CC loops, the deep hot-cell guard) and
     * checkpoint-based compositions (jaccardPairs, nearDupClustersAuto)
     * materialize their dominant subtrees in SEPARATE executions at
     * DataFrame-BUILD time, so a walker that only sees the final plan
     * inspects the cheap post-checkpoint tail and misses the shuffles
     * that matter at 100 TB. A QueryExecutionListener captures them all;
     * the listener bus is async, so capture is polled to quiescence. */
-  private def allShufflePayloads(build: => DataFrame)
-      : Seq[Seq[org.apache.spark.sql.catalyst.expressions.Attribute]] = {
+  private def allExecutedPlans(build: => DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val captured =
@@ -273,9 +267,14 @@ class PlanSpec extends SparkSpec {
         val now = captured.synchronized(captured.size)
         if (now == last) stable += 1 else { stable = 0; last = now }
       }
-      captured.synchronized(captured.toVector).flatMap(walkShuffles)
+      captured.synchronized(captured.toVector)
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** Shuffle payloads across every execution of the operator. */
+  private def allShufflePayloads(build: => DataFrame)
+      : Seq[Seq[org.apache.spark.sql.catalyst.expressions.Attribute]] =
+    allExecutedPlans(build).flatMap(walkShuffles)
 
   private def assertNoShufflePayload(build: => DataFrame, banned: Set[String],
                                      label: String): Unit = {
@@ -822,6 +821,67 @@ class PlanSpec extends SparkSpec {
       .queryExecution.analyzed
     assert(plan.collectFirst { case h: ResolvedHint => h }.isEmpty,
       plan.treeString)
+  }
+
+  test("refineHotCellsDeep: the dense relabel runs no global-order window " +
+    "— every executed Window is partitioned") {
+    // a Window with no partition spec moves every row into one partition
+    // (Spark warns "No Partition Defined for Window operation"). The
+    // fixture is LlmSpec's near-duplicate pile, which one guard level
+    // leaves hot, so the relabel runs on more than one level.
+    import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitExec}
+    import spark.implicits._
+    def pileVec(i: Int): Array[Float] = {
+      val e = Array.fill(32)(0.0f)
+      e(0) = 1.0f
+      e(1 + (i % 31)) = 0.05f + 0.001f * (i % 5)
+      e
+    }
+    def farVec(i: Int): Array[Float] = {
+      val e = Array.fill(32)(0.0f)
+      e(1 + (i % 31)) = 1.0f
+      e
+    }
+    val cs = ((0 until 240).map(i => (i.toLong, pileVec(i), 1L, 0.9)) ++
+      (0 until 40).map(i => (1000L + i, farVec(i), 2L + (i % 4), 0.5)))
+      .toDF("nid", "ce", "cell", "cent_sim")
+    val nodes = allExecutedPlans(graft.llm.Similarity.refineHotCellsDeep(
+      cs, n = 280L, nCells = 14, hotFactor = 4.0, iters = 2))
+      .flatMap(planNodes)
+    // the walk reaches the guard's own per-cell windows (the sub-fit init)
+    val windows = nodes.collect {
+      case w: WindowExecBase => w.partitionSpec
+      case w: WindowGroupLimitExec => w.partitionSpec
+    }
+    assert(windows.nonEmpty, "no Window reached: the walk missed the guard")
+    assert(windows.forall(_.nonEmpty),
+      s"a Window with no partition spec: ${windows.count(_.isEmpty)} of " +
+        s"${windows.size}")
+  }
+
+  test("codegen cache: a second pass over the llm_curation queries " +
+    "compiles no generated code") {
+    // Spark's compiled-class cache is JVM-wide and bounded; at its default
+    // bound these ten queries (the `llm_curation` benchmark set, two per
+    // llm/ family) evict their own classes before reuse and recompile on
+    // every pass. GraftSession sizes the cache to the working set.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val ids = Seq("l16_dedup_clusters", "l30_dedup_apply",
+      "l14_cosine_near_dups", "l05_cosine_topk", "l101_bm25_topk",
+      "l102_winnow", "l122_image_near_dups",
+      "l150_video_offset_grouped_occ_sweep", "l116_repetition_rules",
+      "l99_canary_tripwire")
+    def pass(): Unit = ids.foreach { id =>
+      BenchTiming.cleanup(spark)
+      SparkEntry.queries(id)(spark, sf001)
+        .write.format("noop").mode("overwrite").save()
+    }
+    pass()
+    val warm = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass()
+    val again = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - warm
+    assert(again === 0L, s"the second pass compiled $again bodies " +
+      s"(cache bound ${spark.conf.get("spark.sql.codegen.cache.maxEntries")})")
   }
 
   test("global plan discipline: no CartesianProduct in ANY declared query; " +

@@ -4,23 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one local session per suite, UTC + nanosAsLong like
-  * the production GraftSession, but 4-way to keep fixture-sized shuffles
-  * cheap. */
+/** Shared test harness: one local session per suite, built by
+  * GraftSession like every entry point, but 4-way to keep fixture-sized
+  * shuffles cheap. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .appName(getClass.getSimpleName)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    // Managed-table tests (OltpSourcesSpec) must not litter the repo with
-    // ./spark-warehouse; the session is shared JVM-wide so this applies once.
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .getOrCreate()
+  // Managed-table tests (OltpSourcesSpec) must not litter the repo with
+  // ./spark-warehouse; the session is shared JVM-wide so this applies once.
+  lazy val spark: SparkSession = GraftSession.build(getClass.getSimpleName,
+    cores = 4, warehouseDir = Some(
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
 
   val sf001 = "/root/testdata/sf0.001"
 
